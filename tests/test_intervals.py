@@ -1,4 +1,6 @@
-"""Binned interval join vs a brute-force reference."""
+"""Binned interval join vs a brute-force reference; slot-run detection."""
+
+from hypothesis import given, settings, strategies as st
 
 from usgs_geomag_algorithms_spark.operators.intervals import (
     interval_point_join,
@@ -98,8 +100,8 @@ class TestIntervalPointJoin:
 
 
 class TestSlotRuns:
-    """slot_runs: bucketed island detection over a slot grid (replaces
-    the refresh planners' unpartitioned lag() windows)."""
+    """slot_runs: island detection over a slot grid as one boundary-vote
+    aggregate (the pairing itself is property-tested below, Spark-free)."""
 
     def test_matches_naive_runs(self, spark):
         from usgs_geomag_algorithms_spark.operators.gaps import slot_runs
@@ -107,22 +109,95 @@ class TestSlotRuns:
         iv = 60
         slots = [0, 60, 120, 300, 360, 600, 1200, 1260, 1320, 1380]
         df = spark.createDataFrame([(t,) for t in slots], "t_us long")
-        # tiny buckets so runs cross bucket boundaries
-        got = [(r.s, r.e) for r in slot_runs(df, iv, bucket_slots=3).collect()]
-        assert got == [(0, 120), (300, 360), (600, 600), (1200, 1380)]
+        assert slot_runs(df, iv) == [(0, 120), (300, 360), (600, 600), (1200, 1380)]
 
     def test_single_slot_and_empty(self, spark):
         from usgs_geomag_algorithms_spark.operators.gaps import slot_runs
 
         one = spark.createDataFrame([(42,)], "t_us long")
-        assert [(r.s, r.e) for r in slot_runs(one, 10).collect()] == [(42, 42)]
+        assert slot_runs(one, 10) == [(42, 42)]
         empty = spark.createDataFrame([], "t_us long")
-        assert slot_runs(empty, 10).collect() == []
+        assert slot_runs(empty, 10) == []
 
     def test_unordered_input(self, spark):
         from usgs_geomag_algorithms_spark.operators.gaps import slot_runs
 
         slots = [120, 0, 60, 600, 540]
         df = spark.createDataFrame([(t,) for t in slots], "t_us long").repartition(4)
-        got = [(r.s, r.e) for r in slot_runs(df, 60, bucket_slots=2).collect()]
-        assert got == [(0, 120), (540, 600)]
+        assert slot_runs(df, 60) == [(0, 120), (540, 600)]
+
+    def test_off_grid_slot_raises(self, spark):
+        import pytest
+
+        from usgs_geomag_algorithms_spark.operators.gaps import slot_runs
+
+        # 90 sits between two on-grid slots: the run 0..180 stays whole,
+        # and the off-grid slot is a run of its own on a second residue
+        df = spark.createDataFrame([(t,) for t in (0, 60, 90, 120, 180)], "t_us long")
+        with pytest.raises(ValueError, match="residues"):
+            slot_runs(df, 60)
+
+    def test_plan_is_one_aggregate(self, spark):
+        from usgs_geomag_algorithms_spark.functions.winguard import MARKER
+        from usgs_geomag_algorithms_spark.operators.gaps import slot_run_boundaries
+
+        df = spark.range(1000).selectExpr("id * 60 AS t_us")
+        plan = slot_run_boundaries(df, 60)._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan and MARKER not in plan and "Sort" not in plan
+        assert plan.count("Exchange") == 1
+
+
+def naive_runs(slots, iv):
+    """Sorted-set run detector: consecutive slots ``iv`` apart share a run."""
+    runs = []
+    for t in sorted(set(slots)):
+        if runs and t == runs[-1][1] + iv:
+            runs[-1][1] = t
+        else:
+            runs.append([t, t])
+    return [tuple(r) for r in runs]
+
+
+def vote_boundaries(slots, iv):
+    """The boundary rows slot_run_boundaries' aggregate yields, in Python."""
+    bits = {}
+    for t in slots:
+        for key, b in ((t, 1), (t + iv, 2), (t - iv, 4)):
+            bits[key] = bits.get(key, 0) | b
+    return [(t, b) for t, b in bits.items() if b in (1, 3, 5)]
+
+
+class TestPairRunBoundaries:
+    """pair_run_boundaries against the naive detector: negative stamps,
+    non-zero residues, duplicates, empty input and single slots."""
+
+    @settings(max_examples=300, deadline=None)
+    @given(
+        st.integers(1, 50),
+        st.data(),
+        st.lists(st.integers(-40, 40), max_size=30),
+    )
+    def test_matches_naive_detector(self, iv, data, ks):
+        from usgs_geomag_algorithms_spark.operators.gaps import pair_run_boundaries
+
+        r = data.draw(st.integers(0, iv - 1))
+        slots = [k * iv + r for k in ks]
+        rows = vote_boundaries(slots, iv)
+        data.draw(st.randoms()).shuffle(rows)
+        assert pair_run_boundaries(rows, iv) == naive_runs(slots, iv)
+
+    @settings(max_examples=100, deadline=None)
+    @given(
+        st.integers(2, 50),
+        st.data(),
+        st.lists(st.integers(-40, 40), min_size=1, max_size=20),
+    )
+    def test_second_residue_raises(self, iv, data, ks):
+        import pytest
+
+        from usgs_geomag_algorithms_spark.operators.gaps import pair_run_boundaries
+
+        off = data.draw(st.integers(-40 * iv, 40 * iv).filter(lambda t: t % iv))
+        slots = [k * iv for k in ks] + [off]
+        with pytest.raises(ValueError):
+            pair_run_boundaries(vote_boundaries(slots, iv), iv)

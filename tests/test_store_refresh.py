@@ -502,6 +502,27 @@ class TestRefreshChanged:
         m2 = R.refresh_changed(store, "minute", "hour", MIN_HOUR, v2)
         assert m2["runs_recomputed"] == 0
 
+    def test_sync_reads_changelog_once(self, spark, store, monkeypatch):
+        from usgs_geomag_algorithms_spark.plans import pipeline as P
+
+        v = self._build(spark, store, hours=2)
+        stale = {r.t_us: r.value for r in store.read("hour").collect()}
+        store.upsert(mk(spark, [("u", "text_len", T0 + HOUR, 500.0)]), "minute")
+        calls = []
+        orig = TierStore.changelog
+
+        def counted(self, *a, **kw):
+            calls.append(a)
+            return orig(self, *a, **kw)
+
+        monkeypatch.setattr(TierStore, "changelog", counted)
+        m = P.sync_changed(store, v)
+        assert calls == [("minute", v)]
+        assert m["hour"]["runs_recomputed"] == 1
+        got = {r.t_us: r.value for r in store.read("hour").collect()}
+        assert got[hour_stamp(1)] != pytest.approx(stale[hour_stamp(1)])
+        assert got[hour_stamp(0)] == pytest.approx(stale[hour_stamp(0)])
+
 
 class TestSyncCursor:
     """Cursor-managed CDC sync: the store remembers each consumer's

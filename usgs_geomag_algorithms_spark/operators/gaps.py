@@ -1,4 +1,5 @@
-"""Gap detection and interval merge as window-function plans.
+"""Gap detection and interval merge as window-function plans; slot-run
+detection as one aggregate.
 
 Long-format re-expression of the reference's gap model
 (``geomagio/TimeseriesUtility.py:184-290``): a gap is a maximal run of
@@ -9,9 +10,9 @@ grid slots whose value is NULL/NaN *or absent*. Each detected gap is
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def detect_gaps(
@@ -203,38 +204,86 @@ def merge_gap_intervals(
     return final.unionByName(_merge_runs(spanning, []))
 
 
-def slot_runs(
+def slot_run_boundaries(
     slots: DataFrame,
-    interval_us: int,
+    interval: int | Column,
     t_col: str = "t_us",
-    bucket_slots: int = 1440,
+    key_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Contiguous-run detection over a slot grid: collapse a relation of
-    grid timestamps (spacing ``interval_us``) into ``(s, e)`` run
-    boundaries, where consecutive slots ``t`` and ``t + interval_us``
-    belong to one run.
+    """Spark half of :func:`slot_runs`: the boundary slots of every run, as
+    ``(key_cols..., t, bits)`` rows — O(runs), whatever the slot count.
 
-    This is the refresh planner's missing-slot island detection
-    (``run_as_update``'s gap diff), expressed through the same two-phase
-    bucketed interval merge as :func:`merge_gap_intervals` — a slot ``t``
-    is the degenerate interval ``[t, t]`` with ``next_valid = t +
-    interval_us``, so runs fall out of interval merging.  Unlike a naive
-    ``lag()`` over an unpartitioned window, this stays parallel when the
-    slot relation is large (a fine grid over a long refresh horizon):
-    buckets of ``bucket_slots`` slots merge independently, and only the
-    bucket-spanning remainder (≤ 1 interval per bucket) takes the
-    guarded single-partition pass."""
-    iv = slots.select(
-        F.col(t_col).cast("long").alias("gap_start_us"),
-        F.col(t_col).cast("long").alias("gap_end_us"),
-        (F.col(t_col) + int(interval_us)).cast("long").alias("next_valid_us"),
+    One hash aggregate, no window: each slot ``t`` votes bit 1 at ``t``,
+    bit 2 at ``t + interval`` ("my successor has a predecessor") and bit 4
+    at ``t - interval`` ("my predecessor has a successor"); ``bit_or``
+    per ``(key_cols..., t)`` then reads 1 = slot present, 2 = slot
+    ``t - interval`` present, 4 = slot ``t + interval`` present. A present
+    slot lacking 2 starts a run, one lacking 4 ends it, so the boundary
+    rows are exactly ``bits`` in {1, 3, 5}. Duplicate slots vote the same
+    bits, so callers need no ``distinct``; map-side partial aggregation
+    keeps a year of seconds (31.5 M slots) to one exchange.
+
+    ``interval`` may be a column, so one aggregate can plan several grids
+    at once (one ``key_cols`` group per grid)."""
+    iv = interval if isinstance(interval, Column) else F.lit(int(interval))
+    t = F.col(t_col).cast("long")
+    votes = slots.select(
+        *key_cols,
+        F.inline(
+            F.array(
+                F.struct(t.alias("t"), F.lit(1).alias("b")),
+                F.struct((t + iv).alias("t"), F.lit(2).alias("b")),
+                F.struct((t - iv).alias("t"), F.lit(4).alias("b")),
+            )
+        ),
     )
-    merged = merge_gap_intervals(
-        iv, (), bucket_us=int(interval_us) * int(bucket_slots)
+    return (
+        votes.groupBy(*key_cols, "t")
+        .agg(F.bit_or("b").alias("bits"))
+        .where(F.col("bits").isin(1, 3, 5))
     )
-    return merged.select(
-        F.col("gap_start_us").alias("s"), F.col("gap_end_us").alias("e")
-    ).orderBy("s")
+
+
+def pair_run_boundaries(
+    boundaries: Iterable[tuple[int, int]], interval_us: int
+) -> list[tuple[int, int]]:
+    """Driver half of :func:`slot_runs`: pair ``(t, bits)`` boundary rows
+    into sorted ``(s, e)`` runs — the k-th start with the k-th end.
+
+    Sound only on one grid: every slot must share one residue modulo
+    ``interval_us`` (not necessarily 0 — stamped grids carry an offset).
+    Slots on two residues interleave, and sorted starts no longer meet
+    their own ends, so this raises ``ValueError``. The check is complete
+    on boundaries alone: every run starts and ends at a boundary, and an
+    off-grid slot is a run of its own."""
+    rows = list(boundaries)
+    residues = {t % interval_us for t, _ in rows}
+    if len(residues) > 1:
+        raise ValueError(
+            f"slot_runs: slots lie on {len(residues)} residues modulo "
+            f"{interval_us} (e.g. {sorted(residues)[:4]}); every slot must "
+            "sit on one grid"
+        )
+    starts = sorted(t for t, bits in rows if not bits & 2)
+    ends = sorted(t for t, bits in rows if not bits & 4)
+    return list(zip(starts, ends))
+
+
+def slot_runs(
+    slots: DataFrame, interval_us: int, t_col: str = "t_us"
+) -> list[tuple[int, int]]:
+    """Contiguous-run detection over a slot grid: collapse a relation of
+    grid timestamps (spacing ``interval_us``) into sorted ``(s, e)`` runs,
+    where consecutive slots ``t`` and ``t + interval_us`` belong to one
+    run — the refresh planners' missing-slot island detection
+    (``run_as_update``'s gap diff).
+
+    One action: :func:`slot_run_boundaries` aggregates the slots to their
+    run boundaries, and :func:`pair_run_boundaries` pairs them on the
+    driver. Precondition: all slots share one residue modulo
+    ``interval_us``; a relation that breaks it raises ``ValueError``."""
+    rows = slot_run_boundaries(slots, interval_us, t_col).collect()
+    return pair_run_boundaries(((r.t, r.bits) for r in rows), interval_us)
 
 
 def has_any_channels(

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .. import tiers
 from ..operators.cascade import run_tiers
@@ -122,27 +122,30 @@ def sync_changed(
     after each sync and passes it next time — downstream cost is
     O(changed partitions), never O(table), and a no-change poll is a
     no-op. Complements (does not replace) gap-driven ``update_tiers``:
-    gaps are for missing slots, sync is for STALE ones."""
-    out = {}
-    rng = (
-        store.changelog("minute", since_minute_version)
-        .agg(F.min("t_us").alias("lo"), F.max("t_us").alias("hi"))
-        .first()
+    gaps are for missing slots, sync is for STALE ones.
+
+    The changelog is evaluated once: one action plans every average
+    step's stale runs and the changed range the month repair uses
+    (:func:`refresh.plan_changed`)."""
+    steps = [step for step in tiers.STEPS if step.type == "average"]
+    runs, rng = refresh.plan_changed(
+        store.changelog("minute", since_minute_version), steps
     )
-    for step in tiers.STEPS:
-        if step.type != "average":
-            continue
-        out[step.data_interval] = refresh.refresh_changed(
+    out = {
+        step.data_interval: refresh._recompute_changed(
             store,
             "minute",
             step.data_interval,
             step,
+            step_runs,
             since_minute_version,
             run_id=run_id,
         )
-    if rng.lo is not None:
+        for step, step_runs in zip(steps, runs)
+    }
+    if rng is not None:
         out["month"] = refresh.refresh_month(
-            store, int(rng.lo), int(rng.hi), run_id=run_id, force=True
+            store, rng[0], rng[1], run_id=run_id, force=True
         )
     return out
 

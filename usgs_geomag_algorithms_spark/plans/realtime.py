@@ -147,12 +147,9 @@ def find_derived_gaps(
         missing = expected.join(complete, key, "left_anti")
     else:
         missing = expected
-    missing_slots = missing.select("t_us").distinct()
-
     from ..operators.gaps import slot_runs
 
-    runs = slot_runs(missing_slots, interval_us).collect()
-    return [(r.s, r.e) for r in runs]
+    return slot_runs(missing.select("t_us"), interval_us)
 
 
 def _gap_update_loop(

@@ -25,9 +25,12 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from ..operators.gaps import pair_run_boundaries, slot_run_boundaries, slot_runs
 from ..operators.rollup import rollup_step
 from ..sources.store import TierStore
 from ..tiers import Step
@@ -116,6 +119,38 @@ def output_grid_bounds(step: Step, start_us: int, end_us: int) -> tuple[int, int
     return grid0, grid1
 
 
+def _affected_slots(
+    rows: DataFrame, step: Step, keep: Sequence[str] = ()
+) -> DataFrame:
+    """Stamped output slots (``keep`` columns + ``t_us``) whose filter
+    window holds an on-grid input row of ``rows``.
+
+    A row at t contributes to output anchors a with a+lo_off <= t <=
+    a+hi_off, i.e. a in [t-hi_off, t-lo_off] — a tiny explode
+    (window/out ratio, e.g. 2.5 slots/row for Gaussian-91, 1 for
+    boxcars). Pure integer arithmetic: epoch-us doubles would round near
+    the 2^53 edge, and `div` truncates toward zero — wrong for t_us
+    within a filter half-width of epoch 0. pmod is always non-negative,
+    so floor(x/d)*d = x - pmod(x,d) and ceil(x/d)*d = (x+d-1) -
+    pmod(x+d-1,d) hold for negative x too."""
+    out_us = step.out_us
+    lo_off, hi_off = step.window_lo_offset_us, step.window_hi_offset_us
+    _fx = f"((t_us - {hi_off}) + {out_us - 1})"
+    first_a = f"({_fx} - pmod({_fx}, {out_us}))"
+    last_a = f"((t_us - {lo_off}) - pmod(t_us - {lo_off}, {out_us}))"
+    return (
+        # same off-grid guard as rollup_step: a row the rollup cannot see
+        # must not flag a slot (it would re-recompute forever)
+        rows.where(F.pmod(F.col("t_us"), F.lit(step.in_us)) == 0)
+        .where(F.expr(f"{first_a} <= {last_a}"))
+        .select(
+            *keep,
+            F.explode(F.expr(f"sequence({first_a}, {last_a}, {out_us})")).alias("_a"),
+        )
+        .select(*keep, (F.col("_a") + step.stamp_offset_us).cast("long").alias("t_us"))
+    )
+
+
 def find_output_gaps(
     store: TierStore,
     tier_out: str,
@@ -156,38 +191,8 @@ def find_output_gaps(
     if tier_in is not None and store.exists(tier_in):
         in_lo, in_hi = step.input_interval_us(grid0, grid1)
         src = store.read(tier_in, in_lo, in_hi)
-        # candidate stamped slots per input row: a row at t contributes to
-        # output anchors a with a+lo_off <= t <= a+hi_off, i.e. a in
-        # [t-hi_off, t-lo_off] — a tiny explode (window/out ratio, e.g.
-        # 2.5 slots/row for Gaussian-91, 1 for boxcars). Pure integer
-        # arithmetic: epoch-us doubles would round near the 2^53 edge, and
-        # `div` truncates toward zero — wrong for t_us within a filter
-        # half-width of epoch 0. pmod is always non-negative, so
-        # floor(x/d)*d = x - pmod(x,d) and ceil(x/d)*d = (x+d-1) -
-        # pmod(x+d-1,d) hold for negative x too.
-        lo_off, hi_off = step.window_lo_offset_us, step.window_hi_offset_us
-        stamp_off = step.stamp_offset_us
-        _fx = f"((t_us - {hi_off}) + {out_us - 1})"
-        first_a = f"({_fx} - pmod({_fx}, {out_us}))"
-        last_a = f"((t_us - {lo_off}) - pmod(t_us - {lo_off}, {out_us}))"
         expected_pairs = (
-            # same off-grid guard as rollup_step: a row the rollup cannot
-            # see must not flag an expected slot (it would re-recompute
-            # forever)
-            src.where(F.pmod(F.col("t_us"), F.lit(step.in_us)) == 0)
-            .where(F.expr(f"{first_a} <= {last_a}"))
-            .select(
-                *store.series_cols,
-                F.explode(
-                    F.expr(
-                        f"sequence({first_a}, {last_a}, {out_us})"
-                    )
-                ).alias("_a"),
-            )
-            .select(
-                *store.series_cols,
-                (F.col("_a") + stamp_off).cast("long").alias("t_us"),
-            )
+            _affected_slots(src, step, store.series_cols)
             .where(F.col("t_us").between(grid0, grid1))
             .distinct()
         )
@@ -202,19 +207,15 @@ def find_output_gaps(
             )
         else:
             missing = expected_pairs
-        missing_slots = missing.select("t_us").distinct()
+        missing_slots = missing.select("t_us")
     elif have_out:
         present = store.read(tier_out, grid0, grid1).select("t_us").distinct()
         missing_slots = slots.join(present, "t_us", "left_anti")
     else:
         missing_slots = slots
-    # interval-merge the missing slots (island detection) Spark-side via
-    # the bucketed two-phase merge — parallel even over a long horizon's
-    # fine grid; only run boundaries come back to the driver
-    from ..operators.gaps import slot_runs
-
-    runs = slot_runs(missing_slots, out_us).collect()
-    return [(r.s, r.e) for r in runs]
+    # island detection as one aggregate: only run boundaries come back to
+    # the driver, however fine the grid
+    return slot_runs(missing_slots, out_us)
 
 
 def run_as_update(
@@ -389,6 +390,7 @@ def refresh_month(
     store.append_lineage("month", [{"run_id": run_id, "metrics": metrics}])
     return metrics
 
+
 def refresh_changed(
     store: TierStore,
     tier_in: str,
@@ -419,7 +421,65 @@ def refresh_changed(
 
     Metrics: {runs_recomputed, rows_written, rows_retired}. Idempotent:
     recomputes are deterministic and an empty changelog is a no-op.
+    :func:`pipeline.sync_changed` plans every tier from one changelog
+    evaluation (:func:`plan_changed`) and shares the recompute.
     """
+    ch = store.changelog(tier_in, since_version)
+    runs = slot_runs(_affected_slots(ch, step), step.out_us)
+    return _recompute_changed(
+        store, tier_in, tier_out, step, runs, since_version, run_id
+    )
+
+
+def plan_changed(
+    ch: DataFrame, steps: Sequence[Step]
+) -> tuple[list[list[tuple[int, int]]], tuple[int, int] | None]:
+    """Plan a CDC sync from one evaluation of the changelog ``ch``: the
+    stale slot runs of every step's output grid, plus the changed range's
+    exact ``(min, max)`` of ``t_us`` (None when ``ch`` is empty).
+
+    One Spark action: each step's affected slots carry a step tag into
+    one :func:`slot_run_boundaries` aggregate, and a one-row range
+    aggregate rides in the same collect under tag -1 (its ``t`` holds
+    the min, its ``_x`` the max)."""
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            _affected_slots(ch, step).select(
+                F.lit(i).alias("_step"), "t_us", F.lit(step.out_us).alias("_iv")
+            )
+            for i, step in enumerate(steps)
+        ],
+    )
+    bounds = slot_run_boundaries(tagged, F.col("_iv"), key_cols=["_step"]).select(
+        "_step", "t", F.col("bits").cast("long").alias("_x")
+    )
+    rng = ch.agg(F.min("t_us").alias("t"), F.max("t_us").alias("_x")).select(
+        F.lit(-1).alias("_step"), "t", "_x"
+    )
+    rows = bounds.unionByName(rng).collect()
+    runs = [
+        pair_run_boundaries(
+            ((r.t, r._x) for r in rows if r._step == i), step.out_us
+        )
+        for i, step in enumerate(steps)
+    ]
+    lo, hi = next((r.t, r._x) for r in rows if r._step == -1)
+    return runs, (None if lo is None else (int(lo), int(hi)))
+
+
+def _recompute_changed(
+    store: TierStore,
+    tier_in: str,
+    tier_out: str,
+    step: Step,
+    runs: list[tuple[int, int]],
+    since_version: int,
+    run_id: str | None = None,
+) -> dict:
+    """Recompute each stale output run of :func:`refresh_changed` from the
+    current input snapshot, retire output rows the input no longer
+    produces, and record lineage; returns the metrics."""
     run_id = run_id or f"cdc-{int(time.time() * 1000)}"
     metrics = {
         "run_id": run_id,
@@ -428,29 +488,7 @@ def refresh_changed(
         "rows_written": 0,
         "rows_retired": 0,
     }
-    ch = store.changelog(tier_in, since_version)
-    out_us = step.out_us
-    lo_off, hi_off = step.window_lo_offset_us, step.window_hi_offset_us
-    stamp_off = step.stamp_offset_us
-    # affected stamped anchors (identical integer arithmetic + off-grid
-    # guard as find_output_gaps' expected_pairs)
-    _fx = f"((t_us - {hi_off}) + {out_us - 1})"
-    first_a = f"({_fx} - pmod({_fx}, {out_us}))"
-    last_a = f"((t_us - {lo_off}) - pmod(t_us - {lo_off}, {out_us}))"
-    slots = (
-        ch.where(F.pmod(F.col("t_us"), F.lit(step.in_us)) == 0)
-        .where(F.expr(f"{first_a} <= {last_a}"))
-        .select(
-            F.explode(F.expr(f"sequence({first_a}, {last_a}, {out_us})")).alias("_a")
-        )
-        .select((F.col("_a") + stamp_off).cast("long").alias("t_us"))
-        .distinct()
-    )
-    from ..operators.gaps import slot_runs
-
-    runs = slot_runs(slots, out_us).collect()
-    for r in runs:
-        gap = (int(r.s), int(r.e))
+    for gap in runs:
         in_lo, in_hi = step.input_interval_us(gap[0], gap[1])
         src = store.read(tier_in, in_lo, in_hi)
         out = rollup_step(
