@@ -6,6 +6,7 @@ XYZ identities: test/StreamConverter_test.py) — re-derived fixtures."""
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from usgs_geomag_algorithms_spark.operators.average import average_across_series
@@ -226,6 +227,23 @@ class TestPad:
         out = pad_to_spine(df, T0, T0 + 2 * MIN, 60.0, fill_value=0.0)
         got = {r.t_us: r.value for r in out.collect()}
         assert got == {T0: 1.0, T0 + MIN: 0.0, T0 + 2 * MIN: 0.0}
+
+    def test_column_order_and_duplicate_slot(self, spark):
+        # series, stamp, then every other column in input order; a
+        # duplicated (series, t_us) in range fails instead of picking one
+        df = spark.createDataFrame(
+            [(1.0, "u", "x", T0, "H"), (2.0, "u", "y", T0 + 5 * MIN, "H")],
+            "value double, url string, note string, t_us long, channel string",
+        )
+        out = pad_to_spine(df, T0, T0 + MIN, 60.0)
+        assert out.columns == ["url", "channel", "t_us", "value", "note"]
+        assert sorted(map(tuple, out.collect())) == [
+            ("u", "H", T0, 1.0, "x"),
+            ("u", "H", T0 + MIN, None, None),
+        ]
+        dup = df.union(df.where(F.col("t_us") == T0))
+        with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
+            pad_to_spine(dup, T0, T0 + MIN, 60.0).collect()
 
 
 class TestConvert:

@@ -1,6 +1,7 @@
 """Serving layer + cadence channel end-to-end."""
 
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -229,3 +230,86 @@ class TestAutoTier:
         )
         got = {(r.url, r.t_us): r.value for r in out.collect()}
         assert got[("u1", T0 + MIN)] == 1.0 and len(got) == 5
+
+    def test_padded_read_of_unheld_tier_is_empty(self, spark, tmp_path):
+        # 25 h resolves to the second tier, which no build writes: the
+        # read returns no rows, in the serving schema, on both layouts
+        store = TierStore(spark, str(tmp_path / "t"), n_buckets=2)
+        end = T0 + 25 * 3600 * US - US
+        for packed in (False, True):
+            out = get_timeseries(
+                store, "auto", T0, end, urls=["u1"], use_packed=packed
+            )
+            assert out.schema.simpleString() == (
+                "struct<url:string,channel:string,t_us:bigint,value:double>"
+            )
+            assert out.toPandas().empty
+
+
+class TestOneUrlRead:
+    """A one-url serving read plans, scans and decodes only that url's
+    data, once, and the packed layout returns the long layout's rows."""
+
+    HOUR = 3600 * US
+    DAY = 86400 * US
+    STAMP = (29 * 60 + 30) * US  # hour-tier centre stamp
+    URLS = [f"u{k}" for k in range(6)]
+    # starts mid-way through the day-1 segment
+    START = T0 + DAY + 6 * HOUR + 10 * MIN
+    END = T0 + 2 * DAY + 5 * HOUR
+
+    @pytest.fixture(scope="class")
+    def store(self, spark, tmp_path_factory):
+        store = TierStore(spark, str(tmp_path_factory.mktemp("one_url")), n_buckets=4)
+        rows = [
+            (u, "text_len", T0 + h * self.HOUR + self.STAMP, None if h % 5 == 0 else k * 100.0 + h)
+            for k, u in enumerate(self.URLS)
+            for h in range(60)
+        ]
+        # "late" has a day-1 segment that overlaps the range, but every
+        # point of it lies before the range starts
+        rows += [
+            ("late", "text_len", T0 + self.DAY + h * self.HOUR + self.STAMP, 1.0)
+            for h in range(3)
+        ]
+        df = spark.createDataFrame(
+            rows, "url string, channel string, t_us long, value double"
+        )
+        store.write(df, "hour")
+        store.write_packed(df, "hour")  # one-day segments
+        return store
+
+    def read(self, store, urls, packed):
+        out = get_timeseries(
+            store, "hour", self.START, self.END, urls=urls, use_packed=packed
+        )
+        return sorted(map(tuple, out.collect()), key=lambda r: r[:3])
+
+    def test_packed_read_decodes_once_in_its_buckets(self, store):
+        df = get_timeseries(
+            store, "hour", self.START, self.END, urls=["u3"], use_packed=True
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, plan
+        # the scan keeps only u3's bucket dir, and the url predicate
+        # reaches parquet below the decode
+        (b,) = store._buckets_of(["u3"])
+        assert re.search(rf"PartitionFilters: [^\n]*\(p_bucket#\d+ = {b}\)", plan), plan
+        assert re.search(r"PushedFilters: [^\n]*EqualTo\(url,u3\)", plan), plan
+
+    def test_packed_equals_long_row_for_row(self, store):
+        for urls in (["u3"], ["late"], ["u1", "late"], None):
+            long_rows = self.read(store, urls, packed=False)
+            assert self.read(store, urls, packed=True) == long_rows, urls
+        # the unfiltered read: every url but "late", on all 23 hour slots
+        assert {r[0] for r in long_rows} == set(self.URLS)
+        assert len(long_rows) == 23 * len(self.URLS)
+        assert any(r[3] is None for r in long_rows)
+
+    def test_one_url_read_plans_only_its_bucket_files(self, store):
+        df = get_timeseries(store, "hour", self.START, self.END, urls=["u3"])
+        files = df.inputFiles()
+        (b,) = store._buckets_of(["u3"])
+        assert files and all(f"/p_bucket={b}/" in f for f in files), files
+        plan = store.explain_read("hour", self.START, self.END, series=["u3"])
+        assert len(files) == plan["scanned"] < plan["files_total"], plan

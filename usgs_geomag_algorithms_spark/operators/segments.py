@@ -70,7 +70,13 @@ def unpack_segments(
     ts_col: str = "t_us",
     value_col: str = "value",
 ) -> DataFrame:
-    """Explode packed segments back to long rows (NaN -> NULL)."""
+    """Explode packed segments back to long rows (NaN -> NULL).
+
+    One call decodes a whole Arrow batch: each segment's codecs decode to
+    arrays, which are concatenated once, and the series keys are repeated
+    by the segments' point counts — no per-segment frame. Callers prune
+    segments (range, series) before this runs: the Python stage decodes
+    every segment it is given."""
     series_cols = list(series_cols)
     dtypes = dict(segs.dtypes)
     schema_prefix = ", ".join(f"{c} {dtypes[c]}" for c in series_cols)
@@ -78,22 +84,27 @@ def unpack_segments(
 
     def unpack(batches):
         for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                n = int(row["n"])
-                ts = gorilla.decode_timestamps(bytes(row["ts_codec"]), n)
-                vals = gorilla.decode_values(bytes(row["val_codec"]), n)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            **{c: row[c] for c in series_cols},
-                            ts_col: ts,
-                            value_col: vals,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            if pdf.empty:
+                continue
+            counts = pdf["n"].to_numpy(dtype=np.int64)
+            ts = [
+                gorilla.decode_timestamps(bytes(b), int(n))
+                for b, n in zip(pdf["ts_codec"], counts)
+            ]
+            vals = [
+                gorilla.decode_values(bytes(b), int(n))
+                for b, n in zip(pdf["val_codec"], counts)
+            ]
+            yield pd.DataFrame(
+                {
+                    **{
+                        c: np.repeat(pdf[c].to_numpy(), counts)
+                        for c in series_cols
+                    },
+                    ts_col: np.concatenate(ts),
+                    value_col: np.concatenate(vals),
+                }
+            )
 
     out = segs.mapInPandas(unpack, schema=out_schema)
     # NaN (codec) -> NULL (engine gap convention)

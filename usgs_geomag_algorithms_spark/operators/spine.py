@@ -33,35 +33,6 @@ def grid_start_us(start_us: int, delta_s: float) -> int:
     return -(-(start_us - shift) // delta_us) * delta_us + shift
 
 
-def time_spine(
-    df_keys: DataFrame,
-    start_us: int,
-    end_us: int,
-    delta_s: float,
-    ts_col: str = "t_us",
-) -> DataFrame:
-    """Cross-join the distinct series keys with the tier grid covering
-    [start_us, end_us]. ``df_keys`` should already be distinct key tuples
-    (small relative to facts); the sequence is generated per key row JVM-side
-    (no driver loop, no shuffle beyond the key dedup)."""
-    delta_us = int(round(delta_s * US))
-    t0 = grid_start_us(start_us, delta_s)
-    if t0 > int(end_us):
-        # window too short to contain any stamp of this tier (e.g. an
-        # hour-tier request inside one hour that misses :29:30): the spine
-        # is legitimately empty — sequence() would throw on the inverted
-        # bounds
-        return df_keys.select(
-            "*", F.lit(None).cast("long").alias(ts_col)
-        ).where(F.lit(False))
-    return df_keys.select(
-        "*",
-        F.explode(
-            F.sequence(F.lit(t0), F.lit(int(end_us)), F.lit(delta_us))
-        ).alias(ts_col),
-    )
-
-
 def pad_to_spine(
     df: DataFrame,
     start_us: int,
@@ -76,14 +47,60 @@ def pad_to_spine(
     every (series, grid slot) appears exactly once; slots with no data carry
     ``fill_value`` (NULL = gap, or e.g. 0.0 for count semantics). Data
     outside the range is trimmed (ref ``pad_and_trim_trace``,
-    TimeseriesUtility.py:521-570)."""
+    TimeseriesUtility.py:521-570).
+
+    One aggregate, and ``df`` is evaluated once: each series collects its
+    in-range rows into a ``t_us -> row`` map, and the grid is generated
+    per series JVM-side and looked up in that map. No join, and no second
+    pass over ``df`` for the series keys, so an expensive input (a Python
+    decode) runs a single stage. A series with rows only outside the range
+    still gets its all-gap grid. The request cap bounds each series' map.
+
+    Output columns: ``series_cols``, ``ts_col``, then every other column
+    of ``df`` in its order. Off-grid stamps are dropped. A duplicated
+    (series, ``ts_col``) inside the range fails the query with Spark's
+    ``DUPLICATED_MAP_KEY`` (the default ``spark.sql.mapKeyDedupPolicy``):
+    the padded relation is keyed, and two rows for one slot are a fault
+    of the input, not a choice to make here."""
     series_cols = list(series_cols)
-    keys = df.select(*series_cols).distinct()
-    spine = time_spine(keys, start_us, end_us, delta_s, ts_col=ts_col)
-    fact = df.where(F.col(ts_col).between(int(start_us), int(end_us)))
-    joined = spine.join(fact, on=series_cols + [ts_col], how="left")
+    rest = [c for c in df.columns if c not in series_cols and c != ts_col]
+    delta_us = int(round(delta_s * US))
+    t0 = grid_start_us(start_us, delta_s)
+    if t0 > int(end_us):
+        # window too short to contain any stamp of this tier (e.g. an
+        # hour-tier request inside one hour that misses :29:30): the grid
+        # is legitimately empty — sequence() would throw on the inverted
+        # bounds
+        out = df.select(*series_cols, ts_col, *rest).where(F.lit(False))
+    else:
+        in_range = F.col(ts_col).between(int(start_us), int(end_us))
+        rows = F.map_from_entries(
+            F.collect_list(
+                F.when(in_range, F.struct(F.col(ts_col), F.struct(*rest)))
+            )
+        ).alias("_rows")
+        grid = F.sequence(F.lit(t0), F.lit(int(end_us)), F.lit(delta_us))
+        slots = F.inline(
+            F.transform(
+                grid,
+                lambda t: F.struct(
+                    t.alias(ts_col),
+                    F.try_element_at(F.col("_rows"), t).alias("_row"),
+                ),
+            )
+        )
+        out = (
+            df.groupBy(*series_cols)
+            .agg(rows)
+            .select(*series_cols, slots)
+            .select(
+                *series_cols,
+                ts_col,
+                *[F.col("_row").getField(c).alias(c) for c in rest],
+            )
+        )
     if fill_value is not None:
-        joined = joined.withColumn(
+        out = out.withColumn(
             value_col, F.coalesce(F.col(value_col), F.lit(float(fill_value)))
         )
-    return joined
+    return out

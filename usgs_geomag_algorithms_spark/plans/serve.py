@@ -83,6 +83,11 @@ def get_timeseries(
     reference serves NaN pads and never interpolates,
     TimeseriesUtility.py:486-494 — this is the opt-in extension).
 
+    ``urls`` is pushed into the store read as ``series=``: the scan plans
+    only the requested urls' bucket files (and, packed, decodes only their
+    segments), so a one-url request pays for that url, not for the tier.
+    Padding evaluates the read once (``pad_to_spine`` is one aggregate).
+
     ``use_packed`` reads the Gorilla-packed layout (``read_packed``)
     instead of the long layout — same rows, segment-granular pruning.
     The ``month`` tier pads against its variable-width calendar grid.
@@ -102,9 +107,7 @@ def get_timeseries(
             f"request exceeds {REQUEST_LIMIT_SAMPLES} samples ({n_samples})"
         )
     reader = store.read_packed if use_packed else store.read
-    df = reader(tier, start_us, end_us)
-    if urls:
-        df = df.where(df.url.isin(list(urls)))
+    df = reader(tier, start_us, end_us, series=list(urls) if urls else None)
     if derive and channels:
         from ..operators.convert import pivot_channels, unpivot_channels
         from ..operators.derived import derive_missing_channels

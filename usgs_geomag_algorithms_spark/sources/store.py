@@ -41,6 +41,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.xxhash import spark_bucket
 from ..tiers import US
 from ..operators.merge import merge_last_wins
 
@@ -1355,7 +1356,11 @@ class TierStore:
         return f"{cols}, t_us long, {self.value_schema}"
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], schema=self._schema())
+        # an empty RDD has no partitions, so collecting the frame runs no
+        # task; a local list would start a Python worker to read nothing
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.emptyRDD(), schema=self._schema()
+        )
 
     def _reader(self, base: str):
         """Parquet reader pinned to the tier's DECLARED schema (Iceberg
@@ -1456,24 +1461,12 @@ class TierStore:
     def _buckets_of(
         self, keys: Sequence[str], n_buckets: int | None = None
     ) -> set[int]:
-        """``p_bucket`` values the given series keys hash to — computed by
-        the SAME xxhash64 the write path partitions with (one tiny Spark
-        job over the literal keys; Python has no xxhash64 built-in)."""
-        key_col = self.series_cols[0]
-        keys_df = self.spark.createDataFrame(
-            [(k,) for k in keys], f"{key_col} string"
-        )
-        return {
-            r.b
-            for r in keys_df.select(
-                F.pmod(
-                    F.xxhash64(F.col(key_col)),
-                    F.lit(int(n_buckets or self.n_buckets)),
-                )
-                .cast("int")
-                .alias("b")
-            ).collect()
-        }
+        """``p_bucket`` values the given series keys hash to — the write
+        path's ``pmod(xxhash64(key), n)``, recomputed on the driver by
+        ``functions/xxhash.py`` (bit-identical to Spark's, no Spark job),
+        so pruning a read to a few keys costs microseconds at plan time."""
+        n = int(n_buckets or self.n_buckets)
+        return {spark_bucket(k, n) for k in keys}
 
     def versions(self, tier: str) -> list[int]:
         """Resolvable snapshot versions (ascending) — the time-travel
@@ -2405,15 +2398,24 @@ class TierStore:
         tier: str,
         start_us: int | None = None,
         end_us: int | None = None,
+        series: str | Sequence[str] | None = None,
     ) -> DataFrame:
         """Range-read a packed tier back as long rows. Pruning happens at
         *segment* granularity before any decode runs: the p_date/seg_start
         predicates reach the parquet scan, and only surviving segments pay
-        the Arrow unpack; exact t_us trimming follows after decode."""
+        the Arrow unpack; exact t_us trimming follows after decode.
+
+        ``series`` restricts the read to the given series key(s) before
+        the decode: the scan keeps only the keys' ``p_bucket`` dirs
+        (hashed under the bucket count in ``_segment_meta.json``, which
+        laid them out) and the key predicate drops the other series'
+        segments in those dirs, so a one-url read decodes that url's
+        segments and nothing else."""
         from ..operators.segments import unpack_segments
 
         base = self.path(f"{tier}_packed")
         meta_path = f"{base}/_segment_meta.json"
+        keys = [series] if isinstance(series, str) else series
         has_data = (
             any(
                 True
@@ -2424,11 +2426,18 @@ class TierStore:
             if os.path.exists(base)
             else False
         )
-        if not has_data:
+        if not has_data or (keys is not None and not keys):
             return self._empty()
         with open(meta_path) as f:
-            segment_us = json.load(f)["segment_us"]
+            meta = json.load(f)
+        segment_us = meta["segment_us"]
         segs = self.spark.read.parquet(base)
+        if keys is not None:
+            nb = int(meta.get("n_buckets", self.n_buckets))
+            buckets = sorted(self._buckets_of(keys, n_buckets=nb))
+            segs = segs.where(F.col("p_bucket").isin(buckets)).where(
+                F.col(self.series_cols[0]).isin(list(keys))
+            )
         if start_us is not None:
             # a segment starting before start_us may still contain it
             d0 = time.strftime(
