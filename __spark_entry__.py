@@ -139,22 +139,20 @@ def q_rollup_month_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     from usgs_geomag_algorithms_spark.operators.month import rollup_month
 
     lo, hi = _bounds(spark, sf_dir)
-    padded = _padded_minute_counts(spark, sf_dir, lo, hi)
-    day = rollup_step(
-        padded, MIN_DAY, range_start_us=lo, range_end_us=hi,
-        series_cols=("event_type",),
-    )
     d0 = _dt.datetime.fromtimestamp(lo / 1e6, tz=_dt.timezone.utc)
     m0 = _dt.datetime(d0.year, d0.month, 1, tzinfo=_dt.timezone.utc)
     nxt = _dt.datetime(
         m0.year + (m0.month == 12), m0.month % 12 + 1, 1, tzinfo=_dt.timezone.utc
     )
-    out = rollup_month(
-        day,
-        int(m0.timestamp() * 1e6),
-        int(nxt.timestamp() * 1e6),
+    m0_us, nxt_us = int(m0.timestamp() * 1e6), int(nxt.timestamp() * 1e6)
+    # only the first month is rolled up: pad and roll no minute past it
+    hi = min(hi, nxt_us - MIN_US)
+    padded = _padded_minute_counts(spark, sf_dir, lo, hi)
+    day = rollup_step(
+        padded, MIN_DAY, range_start_us=lo, range_end_us=hi,
         series_cols=("event_type",),
     )
+    out = rollup_month(day, m0_us, nxt_us, series_cols=("event_type",))
     return out.select("event_type", "t_us", F.round("value", 4).alias("value"))
 
 

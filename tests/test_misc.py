@@ -126,3 +126,18 @@ class TestPyFilesArchive:
             check=True, capture_output=True, text=True,
         )
         assert probe.stdout.strip() == "4"
+
+
+class TestHotSeriesShare:
+    def test_share_counted_across_files_and_batches(self, tmp_path):
+        # Spark-free: two parquet files, small row groups, one hot url
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from tools.bench_scaling import hot_series_share
+
+        urls = [["hot"] * 30 + ["a"] * 6 + ["b"] * 4, ["hot"] * 10 + ["b"] * 10]
+        for i, col in enumerate(urls):
+            table = pa.table({"url": col, "status": list(range(len(col)))})
+            pq.write_table(table, tmp_path / f"part-{i}.parquet", row_group_size=7)
+        assert hot_series_share(str(tmp_path)) == 40 / 60

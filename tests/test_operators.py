@@ -230,7 +230,7 @@ class TestPad:
 
     def test_column_order_and_duplicate_slot(self, spark):
         # series, stamp, then every other column in input order; a
-        # duplicated (series, t_us) in range fails instead of picking one
+        # duplicated (series, t_us) in range keeps both rows
         df = spark.createDataFrame(
             [(1.0, "u", "x", T0, "H"), (2.0, "u", "y", T0 + 5 * MIN, "H")],
             "value double, url string, note string, t_us long, channel string",
@@ -241,9 +241,34 @@ class TestPad:
             ("u", "H", T0, 1.0, "x"),
             ("u", "H", T0 + MIN, None, None),
         ]
-        dup = df.union(df.where(F.col("t_us") == T0))
-        with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
-            pad_to_spine(dup, T0, T0 + MIN, 60.0).collect()
+        dup = df.union(df.where(F.col("t_us") == T0).withColumn("note", F.lit("z")))
+        assert sorted(map(tuple, pad_to_spine(dup, T0, T0 + MIN, 60.0).collect())) == [
+            ("u", "H", T0, 1.0, "x"),
+            ("u", "H", T0, 1.0, "z"),
+            ("u", "H", T0 + MIN, None, None),
+        ]
+
+    def test_matches_naive_grid_walk(self, spark):
+        # hour tier (centre stamps), random gaps, duplicates, off-grid and
+        # out-of-range stamps, and a series with no row in the range
+        hour = 60 * MIN
+        start, end = T0 + 10 * MIN, T0 + 40 * hour
+        rng = np.random.default_rng(5)
+        rows = []
+        for k in range(4):
+            stamps = T0 + (29 * MIN + 30 * US) + hour * rng.integers(-3, 44, 25)
+            stamps = np.concatenate([stamps, stamps[:3], stamps[:2] + 7 * US])
+            rows += [(f"u{k}", "H", int(s), float(i)) for i, s in enumerate(stamps)]
+        rows += [("far", "H", T0 + 50 * hour, 1.0)]
+        df = spark.createDataFrame(rows, "url string, channel string, t_us long, value double")
+        got = sorted(map(tuple, pad_to_spine(df, start, end, 3600.0).collect()), key=str)
+        grid = range(T0 + 29 * MIN + 30 * US, end + 1, hour)
+        want = []
+        for u in sorted({r[0] for r in rows if start <= r[2] <= end}):
+            for g in grid:
+                hits = [r for r in rows if r[0] == u and r[2] == g]
+                want += hits or [(u, "H", g, None)]
+        assert got == sorted(want, key=str)
 
 
 class TestConvert:

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..tiers import US
 
@@ -46,57 +46,66 @@ def pad_to_spine(
     """Pad/trim a long frame to the grid over [start_us, end_us]:
     every (series, grid slot) appears exactly once; slots with no data carry
     ``fill_value`` (NULL = gap, or e.g. 0.0 for count semantics). Data
-    outside the range is trimmed (ref ``pad_and_trim_trace``,
-    TimeseriesUtility.py:521-570).
+    outside the range is trimmed first, so the padded series are those
+    with a row in the range, the series a range read returns (ref
+    ``pad_and_trim_trace``, TimeseriesUtility.py:521-570).
 
-    One aggregate, and ``df`` is evaluated once: each series collects its
-    in-range rows into a ``t_us -> row`` map, and the grid is generated
-    per series JVM-side and looked up in that map. No join, and no second
-    pass over ``df`` for the series keys, so an expensive input (a Python
-    decode) runs a single stage. A series with rows only outside the range
-    still gets its all-gap grid. The request cap bounds each series' map.
+    One window pass, and ``df`` is evaluated once: the in-range rows are
+    sorted per series, and each row emits itself (when it sits on the
+    grid) plus the grid slots between it and the series' next row; a
+    series' first row also emits the slots before it. No join and no
+    second pass over ``df`` for the series keys, so an expensive input (a
+    Python decode) runs a single stage, and the range filter reaches
+    ``df``'s scan. The window streams each series' rows (Spark spills its
+    buffer), so no per-series state is held in memory. A filter on the
+    padded output's stamps does not reach ``df`` (each row needs its
+    series' next row), so pass the range the caller needs, not a wider one.
 
     Output columns: ``series_cols``, ``ts_col``, then every other column
     of ``df`` in its order. Off-grid stamps are dropped. A duplicated
-    (series, ``ts_col``) inside the range fails the query with Spark's
-    ``DUPLICATED_MAP_KEY`` (the default ``spark.sql.mapKeyDedupPolicy``):
-    the padded relation is keyed, and two rows for one slot are a fault
-    of the input, not a choice to make here."""
+    (series, ``ts_col``) slot yields one output row per input row, as a
+    join of the grid with ``df`` would: padding does not pick one."""
     series_cols = list(series_cols)
     rest = [c for c in df.columns if c not in series_cols and c != ts_col]
     delta_us = int(round(delta_s * US))
     t0 = grid_start_us(start_us, delta_s)
+    t = F.col(ts_col)
+    df = df.where(t.between(int(start_us), int(end_us)))
     if t0 > int(end_us):
         # window too short to contain any stamp of this tier (e.g. an
         # hour-tier request inside one hour that misses :29:30): the grid
-        # is legitimately empty — sequence() would throw on the inverted
-        # bounds
+        # is legitimately empty
         out = df.select(*series_cols, ts_col, *rest).where(F.lit(False))
     else:
-        in_range = F.col(ts_col).between(int(start_us), int(end_us))
-        rows = F.map_from_entries(
-            F.collect_list(
-                F.when(in_range, F.struct(F.col(ts_col), F.struct(*rest)))
-            )
-        ).alias("_rows")
-        grid = F.sequence(F.lit(t0), F.lit(int(end_us)), F.lit(delta_us))
-        slots = F.inline(
-            F.transform(
-                grid,
-                lambda t: F.struct(
-                    t.alias(ts_col),
-                    F.try_element_at(F.col("_rows"), t).alias("_row"),
-                ),
-            )
+        # each row covers the slots from its own (the first slot at or
+        # after its stamp) up to the next row's own; a series' first row
+        # also covers the slots before it, and its last row those after it
+        t1 = t0 + (int(end_us) - t0) // delta_us * delta_us  # last slot
+        d = F.lit(delta_us)
+        w = Window.partitionBy(*series_cols).orderBy(t)
+        nxt = F.lead(t).over(w)
+        own = t + F.pmod(F.lit(t0) - t, d)
+        lo = F.when(F.row_number().over(w) == 1, F.lit(t0)).otherwise(own)
+        hi = F.greatest(  # exclusive; an on-grid row always covers its own
+            F.coalesce(nxt + F.pmod(F.lit(t0) - nxt, d), F.lit(t1 + delta_us)),
+            own + F.when(own == t, d).otherwise(0),
         )
+        lo_c, hi_c = F.col("_pad_lo"), F.col("_pad_hi")
+        slots = F.when(lo_c < hi_c, F.sequence(lo_c, hi_c - d, d))
+        on_grid = F.col("_pad_t") == F.col(ts_col)
         out = (
-            df.groupBy(*series_cols)
-            .agg(rows)
-            .select(*series_cols, slots)
+            df.select(
+                *series_cols,
+                t.alias("_pad_t"),
+                *rest,
+                lo.alias("_pad_lo"),
+                hi.alias("_pad_hi"),
+            )
+            .select(*series_cols, "_pad_t", *rest, F.explode(slots).alias(ts_col))
             .select(
                 *series_cols,
                 ts_col,
-                *[F.col("_row").getField(c).alias(c) for c in rest],
+                *[F.when(on_grid, F.col(c)).alias(c) for c in rest],
             )
         )
     if fill_value is not None:

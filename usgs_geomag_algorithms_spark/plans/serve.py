@@ -86,7 +86,7 @@ def get_timeseries(
     ``urls`` is pushed into the store read as ``series=``: the scan plans
     only the requested urls' bucket files (and, packed, decodes only their
     segments), so a one-url request pays for that url, not for the tier.
-    Padding evaluates the read once (``pad_to_spine`` is one aggregate).
+    Padding evaluates the read once (``pad_to_spine`` is one window pass).
 
     ``use_packed`` reads the Gorilla-packed layout (``read_packed``)
     instead of the long layout — same rows, segment-granular pruning.
