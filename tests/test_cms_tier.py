@@ -133,8 +133,9 @@ class TestCmsStream:
             r["t_us"]: (r["grid"], r["n_tokens"])
             for r in store.read("hour_cms").collect()
         }
-        # wipe the checkpoint, keep the epoch markers: the restarted
-        # query re-delivers epoch 0 — addition MUST be skipped
+        # wipe the checkpoint, keep the store: the restarted query
+        # re-delivers epoch 0, which the manifest's txns already record —
+        # addition MUST be skipped
         shutil.rmtree(str(tmp_path / "ck"))
         store2 = self._run(spark, tmp_path, [], store=store, ck="ck2")
         after = {
@@ -142,3 +143,38 @@ class TestCmsStream:
             for r in store2.read("hour_cms").collect()
         }
         assert after == before
+
+    def test_crash_after_commit_replays_exactly_once(
+        self, spark, events, tmp_path
+    ):
+        """A crash after epoch 0's commit but before the sink returns
+        (the lineage append raises) makes Spark replay epoch 0 on restart
+        from the same checkpoint. The manifest already records the epoch,
+        so the additive grids must equal a one-pass build."""
+        from unittest import mock
+
+        b0 = events.where(F.col("text").contains("alpha"))
+        b1 = events.where(~F.col("text").contains("alpha"))
+        store = cms_store(spark, str(tmp_path / "store"))
+        real = store.append_lineage
+
+        def crash_in_epoch_0(tier, records):
+            if records[0]["run_id"].endswith("-epoch-0"):
+                raise RuntimeError("crash after the manifest flip")
+            real(tier, records)
+
+        with mock.patch.object(
+            store, "append_lineage", side_effect=crash_in_epoch_0
+        ):
+            with pytest.raises(Exception, match="crash after the manifest"):
+                self._run(spark, tmp_path, [b0, b1], store=store)
+        self._run(spark, tmp_path, [], store=store)  # same checkpoint
+        got = {
+            r["t_us"]: (r["grid"], r["n_tokens"])
+            for r in store.read("hour_cms").collect()
+        }
+        want = {
+            r["t_us"]: (r["grid"], r["n_tokens"])
+            for r in cms_hour_grids(events).collect()
+        }
+        assert got == want

@@ -600,58 +600,43 @@ class TestConcurrentWriters:
         assert {r.station for r in rows} == {f"S{k}" for k in range(8)}
 
     def test_lock_times_out_loudly(self, spark, tmp_path):
-        import os
-
+        from usgs_geomag_algorithms_spark.functions.filelock import (
+            commit_lock,
+        )
         from usgs_geomag_algorithms_spark.sources.metadata import (
             MetadataConflictError,
         )
 
         st = MetadataStore(spark, str(tmp_path / "m"), lock_wait_s=0.2)
-        lock = os.path.join(st.base, "_commit.lock")
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        os.close(fd)
-        try:
+        with commit_lock(st.base, 0.0, RuntimeError):
             with pytest.raises(MetadataConflictError):
                 st.create([{"station": "BOU"}])
-        finally:
-            os.remove(lock)
         # released lock -> the write goes through
         assert st.create([{"station": "BOU"}]) == [1]
 
-    def test_stale_lock_from_dead_writer_is_broken(self, spark, tmp_path):
-        """r4 advice pin: a writer SIGKILLed between creating
-        _commit.lock and its finally-cleanup must not wedge all later
-        writers — the pid in the lock file is detected dead and the
-        orphan lock broken."""
+    def test_stale_lock_from_dead_writer_is_broken(
+        self, spark, tmp_path, lock_holder
+    ):
+        """r4 advice pin: a writer SIGKILLed while holding the commit
+        lock must not wedge later writers. The kernel drops the lock with
+        the process; the lock file itself stays (it is never unlinked)."""
         import os
-        import subprocess
 
         st = MetadataStore(spark, str(tmp_path / "m"), lock_wait_s=0.5)
-        os.makedirs(st.base, exist_ok=True)
-        # a real pid that is guaranteed dead: a finished child process
-        child = subprocess.Popen(["true"])
-        child.wait()
-        lock = os.path.join(st.base, "_commit.lock")
-        with open(lock, "w") as f:
-            f.write(f"pid={child.pid}")
+        holder = lock_holder(st.base)
+        holder.kill()
+        holder.wait(10)
         assert st.create([{"station": "BOU"}]) == [1]  # no conflict raised
-        assert not os.path.exists(lock)
+        assert os.path.exists(os.path.join(st.base, "_commit.lock"))
 
-    def test_live_pid_lock_still_blocks(self, spark, tmp_path):
-        """Counterpart: a lock naming a LIVE pid is honored to timeout."""
-        import os
-
+    def test_live_pid_lock_still_blocks(self, spark, tmp_path, lock_holder):
+        """Counterpart: a lock held by a LIVE process is honored to
+        timeout."""
         from usgs_geomag_algorithms_spark.sources.metadata import (
             MetadataConflictError,
         )
 
         st = MetadataStore(spark, str(tmp_path / "m"), lock_wait_s=0.2)
-        os.makedirs(st.base, exist_ok=True)
-        lock = os.path.join(st.base, "_commit.lock")
-        with open(lock, "w") as f:
-            f.write(f"pid={os.getpid()}")
-        try:
-            with pytest.raises(MetadataConflictError):
-                st.create([{"station": "BOU"}])
-        finally:
-            os.remove(lock)
+        lock_holder(st.base)
+        with pytest.raises(MetadataConflictError):
+            st.create([{"station": "BOU"}])

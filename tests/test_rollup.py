@@ -159,41 +159,6 @@ class TestTenHzFir:
             )
 
 
-class TestPandasVariantParity:
-    def test_sql_and_pandas_rollups_agree(self, spark):
-        from usgs_geomag_algorithms_spark.operators.rollup_pandas import (
-            rollup_step_pandas,
-        )
-
-        rng = np.random.default_rng(23)
-        rows = []
-        for url in ("u1", "u2"):
-            data = rng.normal(100, 5, 1800)
-            data[300:420] = np.nan
-            for i, v in enumerate(data):
-                rows.append(
-                    (url, "c", T0 + i * US, None if np.isnan(v) else float(v))
-                )
-        df = spark.createDataFrame(
-            rows, schema="url string, channel string, t_us long, value double"
-        )
-        lo, hi = T0, T0 + 1799 * US
-        a = {
-            (r.url, r.t_us): r.value
-            for r in rollup_step(df, SEC_MIN, range_start_us=lo, range_end_us=hi).collect()
-        }
-        b = {
-            (r.url, r.t_us): r.value
-            for r in rollup_step_pandas(df, SEC_MIN, lo, hi).collect()
-        }
-        assert set(a) == set(b)
-        for k in a:
-            if a[k] is None:
-                assert b[k] is None
-            else:
-                np.testing.assert_almost_equal(a[k], b[k], decimal=9)
-
-
 class TestQuantileRollup:
     def _sig(self, spark, vals, series="a", t0=0):
         from pyspark.sql import functions as F

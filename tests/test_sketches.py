@@ -277,8 +277,9 @@ class TestSketchStream:
             (r["t_us"], r["n_events"])
             for r in read_sketch_tier(store).collect()
         }
-        # wipe the streaming checkpoint (NOT the epoch markers): the
-        # restarted query re-delivers epoch 0 — the marker must skip it
+        # wipe the streaming checkpoint (NOT the store): the restarted
+        # query re-delivers epoch 0 — the manifest's txns entry must
+        # skip it
         import shutil
 
         shutil.rmtree(str(tmp_path / "ck"))
@@ -300,6 +301,57 @@ class TestSketchStream:
             for r in read_sketch_tier(store).collect()
         }
         assert after == before  # n_events not double-counted
+
+
+    def test_two_sinks_on_one_tier_both_land(self, spark, tmp_path):
+        """A second stream into the same tier under another metric keeps
+        its own epoch ledger (``hour_sketch/sessions``): its epochs 0
+        and 1 land although the ``users`` stream already committed
+        epochs 0 and 1 into that tier."""
+        import os
+
+        from usgs_geomag_algorithms_spark.operators.sketches import (
+            read_sketch_tier,
+        )
+        from usgs_geomag_algorithms_spark.streaming.sketch_stream import (
+            streaming_sketch_maintenance,
+        )
+
+        ev = _events(spark, hours=2)
+        users = [ev.where(F.col("user_id") % 4 == k) for k in (0, 1)]
+        sessions = [ev.where(F.col("user_id") % 4 == k) for k in (2, 3)]
+        store = self._run_stream(spark, tmp_path, users)
+        src = str(tmp_path / "src_sessions")
+        os.makedirs(src)
+        for i, df in enumerate(sessions):
+            stage = str(tmp_path / f"stage_sessions{i}")
+            df.coalesce(1).write.parquet(stage)
+            for f in os.listdir(stage):
+                if f.endswith(".parquet"):
+                    os.rename(f"{stage}/{f}", f"{src}/b{i}.parquet")
+        q = streaming_sketch_maintenance(
+            spark.readStream.schema("ts timestamp, user_id bigint")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            store,
+            metric="sessions",
+            checkpoint_dir=str(tmp_path / "ck_sessions"),
+            trigger_available_now=True,
+        )
+        q.awaitTermination(120)
+        q.stop()
+        for metric, parts in (("users", users), ("sessions", sessions)):
+            got = {
+                r["t_us"]: r["n_events"]
+                for r in read_sketch_tier(store, metric=metric).collect()
+            }
+            want = {
+                r["t_us"]: r["n_events"]
+                for r in hll_hour_sketches(
+                    parts[0].unionByName(parts[1])
+                ).collect()
+            }
+            assert got == want, metric
 
 
 class TestRollingUsers:

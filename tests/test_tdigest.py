@@ -313,9 +313,9 @@ class TestTdigestStream:
             (r["t_us"], r["n"], bytes(r["digest"]))
             for r in store.read("hour_digest").collect()
         }
-        # wipe the checkpoint (NOT the epoch markers): the restarted
-        # query re-delivers epoch 0 — the marker must skip it, else the
-        # additive merge would double every weight
+        # wipe the checkpoint (NOT the store): the restarted query
+        # re-delivers epoch 0 — the manifest's txns entry must skip it,
+        # else the additive merge would double every weight
         shutil.rmtree(str(tmp_path / "ck"))
         store = self._run_stream(spark, tmp_path, [], store=store, ck="ck2")
         after = {
@@ -323,6 +323,43 @@ class TestTdigestStream:
             for r in store.read("hour_digest").collect()
         }
         assert after == before
+
+
+    def test_crash_after_commit_replays_exactly_once(self, spark, tmp_path):
+        """A crash after epoch 0's commit but before the sink returns
+        (the lineage append raises) makes Spark replay epoch 0 on restart
+        from the same checkpoint. The manifest already records the epoch,
+        so every hour's weight must equal its sample count."""
+        from unittest import mock
+
+        df, rows = self._samples(spark, hours=2)
+        b0 = df.where(F.col("t_us") % 2 == 0)
+        b1 = df.where(F.col("t_us") % 2 == 1)
+        store = tdigest_store(
+            spark, str(tmp_path / "store"), series_col="series"
+        )
+        real = store.append_lineage
+
+        def crash_in_epoch_0(tier, records):
+            if records[0]["run_id"].endswith("-epoch-0"):
+                raise RuntimeError("crash after the manifest flip")
+            real(tier, records)
+
+        with mock.patch.object(
+            store, "append_lineage", side_effect=crash_in_epoch_0
+        ):
+            with pytest.raises(Exception, match="crash after the manifest"):
+                self._run_stream(spark, tmp_path, [b0, b1], store=store)
+        self._run_stream(spark, tmp_path, [], store=store)  # same checkpoint
+        want = {}
+        for t, _ in rows:
+            h = (t // HOUR_US) * HOUR_US
+            want[h] = want.get(h, 0) + 1
+        got = store.read("hour_digest").collect()
+        assert {r["t_us"]: r["n"] for r in got} == want
+        for r in got:
+            _, weights, _, _ = unpack_digest(bytes(r["digest"]))
+            assert weights.sum() == r["n"]
 
 
 class TestRollingDigest:

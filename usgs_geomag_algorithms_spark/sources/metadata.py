@@ -22,7 +22,8 @@ Covers three reference surfaces:
 Design: metadata is a *dimension* relation — a few thousand epoch rows
 governing petabytes of facts — so the store keeps it as snapshot-
 versioned JSON (exact ints, native NULLs, atomic tmp+rename commits
-under the same O_CREAT|O_EXCL lock discipline as :class:`.store.TierStore`)
+under the same kernel-held commit lock as :class:`.store.TierStore`,
+``functions/filelock.py``)
 and exposes every read as a Spark DataFrame.  The scale-critical side is
 the *join* onto facts, which stays a broadcast interval join
 (:func:`..operators.misc.apply_instrument_metadata`); this store never
@@ -34,9 +35,10 @@ from __future__ import annotations
 import json
 import os
 import time
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from ..functions.filelock import commit_lock
 
 #: Spark schema of the metadata relation — metadata_table.py columns with
 #: times as epoch microseconds and the JSON payload as a string column.
@@ -68,7 +70,7 @@ class MetadataStore:
                                      "next_history_id": ..}
         {base}/v{N}.json            full current rows at version N
         {base}/h{N}.json            full history rows at version N
-        {base}/_commit.lock         transient writer lock
+        {base}/_commit.lock         flock'd writer lock (kept on disk)
 
     Versions are immutable — ``read(version=k)`` time-travels, matching
     the snapshot discipline of the main TierStore.
@@ -115,73 +117,8 @@ class MetadataStore:
         os.replace(tmp, os.path.join(self.base, "manifest.json"))
         return v
 
-    def _lock_is_stale(self, lock: str) -> bool:
-        """True when the current holder of ``lock`` can never release it:
-        the pid written into the file is dead, or (pid unreadable — the
-        writer was killed inside the create→write window) the file's
-        mtime is older than a generous TTL.  Same-host assumption as the
-        lock itself; a live pid from an unrelated recycled process keeps
-        the lock conservatively held until the TTL."""
-        try:
-            with open(lock) as f:
-                body = f.read()
-        except OSError:
-            return False  # already released
-        pid = None
-        if body.startswith("pid="):
-            try:
-                pid = int(body[4:].strip())
-            except ValueError:
-                pid = None
-        if pid is not None:
-            try:
-                os.kill(pid, 0)
-                return False  # holder alive
-            except ProcessLookupError:
-                return True  # holder died without cleanup
-            except PermissionError:
-                return False  # alive, different uid
-            except OSError:
-                pass  # fall through to TTL
-        try:
-            age = time.time() - os.stat(lock).st_mtime
-        except OSError:
-            return False
-        return age > max(3.0 * self.lock_wait_s, 30.0)
-
-    @contextmanager
     def _lock(self):
-        lock = os.path.join(self.base, "_commit.lock")
-        deadline = time.monotonic() + self.lock_wait_s
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                # a writer killed hard (SIGKILL/OOM) between creating the
-                # lock and its finally-cleanup would otherwise wedge every
-                # later writer: detect and break the orphan
-                if self._lock_is_stale(lock):
-                    try:
-                        os.remove(lock)
-                    except FileNotFoundError:
-                        pass
-                    continue
-                if time.monotonic() < deadline:
-                    time.sleep(0.05)
-                    continue
-                raise MetadataConflictError(
-                    f"metadata commit lock {lock} is held"
-                ) from None
-        try:
-            os.write(fd, f"pid={os.getpid()}".encode())
-            os.close(fd)
-            yield
-        finally:
-            try:
-                os.remove(lock)
-            except FileNotFoundError:
-                pass
+        return commit_lock(self.base, self.lock_wait_s, MetadataConflictError)
 
     def versions(self) -> list[int]:
         return list(range(1, self._manifest()["version"] + 1))

@@ -15,8 +15,14 @@ same operational surface on plain parquet plus a tiny manifest layer:
   manifest keeps valid file paths while any number of writes, compactions,
   or retention drops land (Iceberg's snapshot-isolation contract, scaled
   down; at 10^12 rows the same roles are played by Iceberg manifests +
-  ``expire_snapshots``). Single writer per tier, as with Iceberg's
-  optimistic-lock simplification.
+  ``expire_snapshots``). Commits serialize on one kernel-held lock per
+  tier (``functions/filelock.py``); a writer that dies mid-commit
+  releases it with its process, so a crash never wedges the tier.
+- **exactly-once sinks**: a streaming sink passes ``txn=(sink_id,
+  epoch)`` to :meth:`TierStore.write`/:meth:`TierStore.upsert`; the
+  manifest's ``txns`` map records the last epoch each sink committed,
+  in the same atomic flip as the data, and a replayed epoch is skipped
+  under the lock (the Iceberg/Delta streaming-sink contract)
 - partition overwrite = append new files + manifest flip excluding the
   touched partitions' old files (``MERGE INTO`` refresh semantics,
   idempotent)
@@ -41,6 +47,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.filelock import commit_lock
 from ..functions.xxhash import spark_bucket
 from ..tiers import US
 from ..operators.merge import merge_last_wins
@@ -172,9 +179,6 @@ class TierStore:
 
     def _manifest_version_path(self, base: str, version: int) -> str:
         return f"{base}/_manifests/v{version}.json"
-
-    def _lock_path(self, base: str) -> str:
-        return f"{base}/_commit.lock"
 
     # -------------------------------------------------- named refs (tags)
     def _refs_path(self, base: str) -> str:
@@ -319,60 +323,15 @@ class TierStore:
         return versions, files
 
     def _commit_lock(self, base: str):
-        """Exclusive tier-commit guard: O_CREAT|O_EXCL lockfile held across
-        load-manifest → append-files → manifest-flip. A second writer
-        polls for up to ``lock_wait_s`` (committers queue, like Iceberg's
-        commit lock), then raises ``ConcurrentWriterError`` naming the
-        holder instead of a silent last-flip-wins file loss. A crashed
-        holder's lock is released with :meth:`force_unlock` (the error
-        message says so) — deliberately manual, since auto-breaking by
-        TTL reintroduces the race it exists to prevent."""
-        from contextlib import contextmanager
-
-        lock = self._lock_path(base)
-
-        @contextmanager
-        def _held():
-            deadline = time.monotonic() + self.lock_wait_s
-            while True:
-                try:
-                    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    break
-                except FileExistsError:
-                    if time.monotonic() < deadline:
-                        time.sleep(0.1)
-                        continue
-                    try:
-                        with open(lock) as f:
-                            holder = f.read().strip() or "?"
-                    except OSError:
-                        holder = "?"
-                    raise ConcurrentWriterError(
-                        f"commit lock {lock} is held ({holder}); the store "
-                        f"is single-writer per tier (set lock_wait_s to "
-                        f"queue). If the holder crashed, release it with "
-                        f"TierStore.force_unlock()."
-                    ) from None
-            try:
-                os.write(fd, f"pid={os.getpid()} at={time.time():.0f}".encode())
-                os.close(fd)
-                yield
-            finally:
-                try:
-                    os.remove(lock)
-                except FileNotFoundError:
-                    pass
-
-        return _held()
-
-    def force_unlock(self, tier: str) -> bool:
-        """Release a commit lock left behind by a crashed writer. Returns
-        True when a lock was removed."""
-        try:
-            os.remove(self._lock_path(self.path(tier)))
-            return True
-        except FileNotFoundError:
-            return False
+        """Exclusive tier-commit guard held across load-manifest ->
+        append-files -> manifest-flip: a kernel ``flock`` on
+        ``<base>/_commit.lock`` (``functions/filelock.py``). A second
+        writer polls for up to ``lock_wait_s`` (committers queue, like
+        Iceberg's commit lock), then raises ``ConcurrentWriterError``
+        instead of a silent last-flip-wins file loss. A holder that dies
+        releases the lock with its process, so there is nothing to break
+        by hand."""
+        return commit_lock(base, self.lock_wait_s, ConcurrentWriterError)
 
     def _load_manifest(self, base: str) -> dict | None:
         p = self._manifest_path(base)
@@ -480,6 +439,7 @@ class TierStore:
         seq_override: dict | None = None,
         set_specs: list[int] | None = None,
         spec_override: dict | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> dict:
         """Advance the manifest one version: ``new_files`` become live,
         ``replaced`` move to trash, expired trash is collected.
@@ -489,10 +449,14 @@ class TierStore:
 
         Version CAS: the flip is only valid against the snapshot the
         mutation was computed from — if the on-disk manifest advanced in
-        the meantime (a concurrent writer slipped past the lock, e.g. via
-        a second store instance on a shared filesystem without O_EXCL
-        semantics), committing would orphan that writer's files, so the
+        the meantime (a concurrent writer slipped past the lock, e.g. a
+        writer on another host of a shared filesystem, where ``flock`` is
+        not shared), committing would orphan that writer's files, so the
         commit aborts loudly instead.
+
+        ``txn=(sink_id, epoch)`` records a streaming sink's epoch in the
+        manifest's ``txns`` map; every commit carries the map forward,
+        so "already applied" is part of the same atomic flip as the data.
 
         Each new file's column bounds (t_us and leading-series min/max,
         row count) are read from its parquet footer here and recorded in
@@ -573,6 +537,9 @@ class TierStore:
             spec.update(
                 {f: int(v) for f, v in spec_override.items() if f in spec}
             )
+        txns = dict(m.get("txns", {}))
+        if txn is not None:
+            txns[txn[0]] = int(txn[1])
         out = {
             "version": version,
             "files": all_live,
@@ -583,6 +550,8 @@ class TierStore:
             "specs": specs,
             "spec": spec,
         }
+        if txns:  # only sink-written tiers carry the map
+            out["txns"] = txns
         self._gc_trash(base, out, listing)
         self._save_manifest(base, out)
         return out
@@ -701,6 +670,7 @@ class TierStore:
         tier: str,
         _based_on: dict | None = None,
         _replace_dirs: set[str] | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> None:
         """Partition overwrite through the snapshot manifest: new files are
         APPENDED (never clobbering live ones), then one atomic manifest
@@ -717,11 +687,18 @@ class TierStore:
         current snapshot and lands anyway; on overlap it raises
         :class:`StaleSnapshotError` (the merge result is stale — the
         appended files are swept as orphans by the next commit) and
-        :meth:`upsert` recomputes and retries."""
+        :meth:`upsert` recomputes and retries.
+
+        ``txn=(sink_id, epoch)`` makes the write exactly-once per sink
+        epoch: when the manifest already records ``epoch`` (or a later
+        one) for ``sink_id``, nothing is written; otherwise the flip
+        records it (see :meth:`txn_epoch`)."""
         base = self.path(tier)
         os.makedirs(base, exist_ok=True)
         with self._commit_lock(base):
             m = self._load_manifest(base)
+            if txn is not None and self._txn_of(m, txn[0]) >= txn[1]:
+                return
             conflict_dirs: set[str] = set()
             if _based_on is not None:
                 current = (m or {}).get("version", 0)
@@ -824,9 +801,16 @@ class TierStore:
                 spec_override=(
                     {f: -1 for f in new_files} if mixed else None
                 ),
+                txn=txn,
             )
 
-    def upsert(self, df: DataFrame, tier: str, clobber: bool = False) -> None:
+    def upsert(
+        self,
+        df: DataFrame,
+        tier: str,
+        clobber: bool = False,
+        txn: tuple[str, int] | None = None,
+    ) -> None:
         """Read-modify-write merge into existing partitions (last-wins, new
         data preferred, gaps never clobber values) — the MERGE INTO analog.
 
@@ -837,9 +821,10 @@ class TierStore:
         into a years-deep tier reads one day, not the tier (the scan-scope
         property Iceberg's MERGE INTO gets from its manifests). The
         remaining semi-join guards the legacy no-manifest path, where only
-        directory listing is available."""
+        directory listing is available. ``txn`` is passed to
+        :meth:`write` (exactly-once sink epochs)."""
         if not self.exists(tier):
-            self.write(df, tier)
+            self.write(df, tier, txn=txn)
             return
         # optimistic commit (Iceberg MERGE INTO semantics): pin the
         # snapshot the merge reads from; if another writer lands a commit
@@ -922,6 +907,7 @@ class TierStore:
                         if multi
                         else None
                     ),
+                    txn=txn,
                 )
                 return
             except StaleSnapshotError as e:
@@ -2647,6 +2633,15 @@ class TierStore:
                 with open(os.path.join(d, fn)) as f:
                     out[fn[len(tier) + 1 : -5]] = int(json.load(f)["version"])
         return out
+
+    @staticmethod
+    def _txn_of(m: dict | None, sink_id: str) -> int:
+        return int((m or {}).get("txns", {}).get(sink_id, -1))
+
+    def txn_epoch(self, tier: str, sink_id: str) -> int:
+        """Last streaming epoch ``sink_id`` committed into ``tier`` (-1
+        when none): the manifest's record of what is already applied."""
+        return self._txn_of(self._load_manifest(self.path(tier)), sink_id)
 
     def current_version(self, tier: str) -> int:
         """Current snapshot version of ``tier`` (TimeTravelError if the

@@ -2,27 +2,19 @@
 
 The frequency twin of streaming/sketch_stream.py: tokens arrive
 incrementally within an hour, so each micro-batch's grid is ADDED into
-the stored hour grid (``zip_with(stored, batch, +)``).  Unlike HLL
-union, addition is NOT idempotent — a replayed epoch would double-count
-— so the whole epoch is guarded by the write-once marker directory
-(index_stream.py discipline): replay detection is the correctness
-mechanism here, not a bookkeeping nicety.
-
-Scale shape per micro-batch: one groupBy(hour) that collapses to ≤
-depth·width cells map-side, a store read pruned to the touched hours'
-partitions, a zip_with fold per touched hour, and one manifest-isolated
-upsert — O(batch + touched hours), never O(tier).
+the stored hour grid (``zip_with(stored, batch, +)``). Addition is not
+idempotent, so exactly-once rests on the shared sink
+(``tier_sink.merge_into_tier``): the epoch id is committed in the same
+manifest flip as the grids, and a replayed epoch is skipped whole.
 """
 
 from __future__ import annotations
-
-import os
-import time
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cms import CMS_DEPTH, CMS_WIDTH, cms_hour_grids, grid_add
+from .tier_sink import merge_into_tier
 
 
 def cms_store(spark, root: str, metric_col: str = "metric"):
@@ -53,60 +45,28 @@ def streaming_cms_maintenance(
     """Start ``text stream -> per-batch hour grids -> add into the grid
     tier``. Returns the running query; callers own stop()."""
     series_col = store.series_cols[0]
-    marker_root = os.path.join(store.path(tier) + "_epochs")
 
-    def sink(batch: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(marker_root, str(epoch_id))
-        if os.path.exists(marker):
-            return  # replayed epoch: addition must not re-apply
-        if batch.isEmpty():
-            return
-        delta = cms_hour_grids(
+    def delta(batch: DataFrame) -> DataFrame:
+        return cms_hour_grids(
             batch, depth, width, ts_col=ts_col, text_col=text_col
         ).select(F.lit(metric).alias(series_col), "t_us", "grid", "n_tokens")
-        hours = [r["t_us"] for r in delta.select("t_us").distinct().collect()]
-        if store.exists(tier):
-            old = store.read(tier).where(
-                (F.col(series_col) == metric) & F.col("t_us").isin(hours)
-            )
-            merged = (
-                old.unionByName(delta)
-                .groupBy(series_col, "t_us")
-                .agg(
-                    F.expr(
-                        f"aggregate(collect_list(grid),"
-                        f" array_repeat(0L, {depth * width}),"
-                        " (acc, g) -> zip_with(acc, g, (a, b) -> a + b))"
-                    ).alias("grid"),
-                    F.sum("n_tokens").cast("long").alias("n_tokens"),
-                )
-            )
-        else:
-            merged = delta
-        store.upsert(merged, tier)
-        store.append_lineage(
-            tier,
-            [
-                {
-                    "run_id": f"cms-epoch-{epoch_id}",
-                    "tier": tier,
-                    "rows": len(hours),
-                    "ts": time.time(),
-                }
-            ],
-        )
-        os.makedirs(marker, exist_ok=True)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+    def merge(rows: DataFrame) -> DataFrame:
+        return rows.groupBy(series_col, "t_us").agg(
+            F.expr(
+                f"aggregate(collect_list(grid),"
+                f" array_repeat(0L, {depth * width}),"
+                " (acc, g) -> zip_with(acc, g, (a, b) -> a + b))"
+            ).alias("grid"),
+            F.sum("n_tokens").cast("long").alias("n_tokens"),
+        )
+
+    return merge_into_tier(
+        stream, store, tier, checkpoint_dir, delta, "cms",
+        series=metric, merge=merge,
+        trigger_available_now=trigger_available_now,
+        processing_time=processing_time,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 __all__ = ["cms_store", "streaming_cms_maintenance", "grid_add"]

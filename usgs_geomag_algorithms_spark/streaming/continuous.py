@@ -5,7 +5,8 @@ aggregates"): ``streaming_rollup_step`` windows close as the watermark
 passes, and each micro-batch of closed windows is upserted into the tier
 table via ``foreachBatch`` — last-wins merge, so replays after a failed
 epoch are idempotent (Structured Streaming re-delivers the same window
-rows; the upsert keys on (series, t_us)). Lineage records one row per
+rows; the upsert keys on (series, t_us)). The sink is the shared
+``tier_sink.merge_into_tier`` with no merge. Lineage records one row per
 epoch: the reference's ``run_as_update`` bookkeeping
 (``geomagio/Controller.py:326-474``) carried by the engine's streaming
 checkpoint instead of a cron state file.
@@ -17,7 +18,6 @@ merge semantics, so the lambda handoff is just "run the batch job".
 
 from __future__ import annotations
 
-import time
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -26,6 +26,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..sources.store import TierStore
 from ..tiers import Step
 from .rollup_stream import streaming_rollup_step
+from .tier_sink import merge_into_tier
 
 
 def continuous_aggregate(
@@ -56,30 +57,8 @@ def continuous_aggregate(
         ts_col=ts_col,
         value_col=value_col,
     )
-
-    def sink(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        store.upsert(batch, tier)
-        store.append_lineage(
-            tier,
-            [
-                {
-                    "run_id": f"stream-epoch-{epoch_id}",
-                    "tier": tier,
-                    "rows": batch.count(),
-                    "ts": time.time(),
-                }
-            ],
-        )
-
-    writer = (
-        out.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+    return merge_into_tier(
+        out, store, tier, checkpoint_dir, lambda batch: batch, "stream",
+        trigger_available_now=trigger_available_now,
+        processing_time=processing_time,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

@@ -33,6 +33,7 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.dedup_index import incremental_near_dups, write_lsh_index
+from .tier_sink import start_foreach_batch
 
 
 def index_maintenance_batch(
@@ -89,13 +90,9 @@ def streaming_index_maintenance(
     """Wire a document stream into probe-then-append index maintenance.
     Returns the started StreamingQuery; pass ``on_pairs`` via kwargs to
     receive each batch's near-dup pairs."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            index_maintenance_batch(index_path, **kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_foreach_batch(
+        stream,
+        index_maintenance_batch(index_path, **kwargs),
+        checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -3,34 +3,20 @@
 Events arrive incrementally WITHIN an hour, so the continuous-aggregate
 replace-on-upsert rule (continuous.py) would drop earlier micro-batches'
 users. The sketch tier instead MERGES each micro-batch: per touched
-hour, ``new_sketch = hll_union(stored_sketch, batch_sketch)``. HLL union
-is register-max, hence IDEMPOTENT — re-unioning a replayed batch's
-sketch changes nothing — so the estimate is exactly-once under
-Structured Streaming's at-least-once epoch replay for free. The one
-non-idempotent column, ``n_events`` (a sum), is guarded by a per-epoch
-marker directory (the write-once discipline of
-streaming/index_stream.py): a replayed epoch is detected and skipped
-whole. A crash in the window between the store's manifest flip and the
-marker mkdir re-counts that epoch's n_events on replay — the ESTIMATE
-column stays exact unconditionally (union idempotence); the same
-exposure and convention as index_stream's append marker.
-
-Scale shape per micro-batch: one groupBy(hour) whose partial state is a
-sketch (bytes, never raw user ids on the shuffle), a store read pruned
-to the touched hours' partitions only, one union aggregate bounded by
-the touched-hour count, and the store upsert's manifest commit — O(batch
-+ touched hours), never O(tier).
+hour, ``new_sketch = hll_union(stored_sketch, batch_sketch)`` and
+``n_events`` add. HLL union is register-max, hence idempotent, but the
+``n_events`` sum is not; the shared sink (``tier_sink.merge_into_tier``)
+commits the epoch id in the same manifest flip as the rows, so a
+replayed epoch is skipped whole and both columns stay exact.
 """
 
 from __future__ import annotations
-
-import os
-import time
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.sketches import hll_hour_sketches
+from .tier_sink import merge_into_tier
 
 
 def streaming_sketch_maintenance(
@@ -48,55 +34,23 @@ def streaming_sketch_maintenance(
     """Start ``event stream -> per-batch hour sketches -> union into the
     sketch tier``. Returns the running query; callers own stop()."""
     series_col = store.series_cols[0]
-    marker_root = os.path.join(store.path(tier) + "_epochs")
 
-    def sink(batch: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(marker_root, str(epoch_id))
-        if os.path.exists(marker):
-            return  # replayed epoch: already applied (n_events guard)
-        if batch.isEmpty():
-            return
-        delta = hll_hour_sketches(
+    def delta(batch: DataFrame) -> DataFrame:
+        return hll_hour_sketches(
             batch, ts_col=ts_col, key_col=key_col, lg_k=lg_k
         ).select(
             F.lit(metric).alias(series_col), "t_us", "sketch", "n_events"
         )
-        hours = [r["t_us"] for r in delta.select("t_us").distinct().collect()]
-        if store.exists(tier):
-            old = store.read(tier).where(
-                (F.col(series_col) == metric) & F.col("t_us").isin(hours)
-            )
-            merged = (
-                old.unionByName(delta)
-                .groupBy(series_col, "t_us")
-                .agg(
-                    F.expr("hll_union_agg(sketch)").alias("sketch"),
-                    F.sum("n_events").alias("n_events"),
-                )
-            )
-        else:
-            merged = delta
-        store.upsert(merged, tier)
-        store.append_lineage(
-            tier,
-            [
-                {
-                    "run_id": f"sketch-epoch-{epoch_id}",
-                    "tier": tier,
-                    "rows": len(hours),
-                    "ts": time.time(),
-                }
-            ],
-        )
-        os.makedirs(marker, exist_ok=True)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+    def merge(rows: DataFrame) -> DataFrame:
+        return rows.groupBy(series_col, "t_us").agg(
+            F.expr("hll_union_agg(sketch)").alias("sketch"),
+            F.sum("n_events").alias("n_events"),
+        )
+
+    return merge_into_tier(
+        stream, store, tier, checkpoint_dir, delta, "sketch",
+        series=metric, merge=merge,
+        trigger_available_now=trigger_available_now,
+        processing_time=processing_time,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

@@ -4,38 +4,22 @@ Samples arrive incrementally WITHIN an hour, so the continuous-aggregate
 replace-on-upsert rule (continuous.py) would drop earlier micro-batches'
 contribution to the hour's digest. This sink instead MERGES each
 micro-batch: per touched hour, ``new_digest = merge(stored_digest,
-batch_digest)`` — weights add, centroids recompress.
+batch_digest)``; weights add, centroids recompress.
 
-Replay semantics differ from the HLL stream (sketch_stream.py) in one
-important way: HLL union is register-max and therefore IDEMPOTENT, so
-the estimate column survives epoch replay for free and only n_events
-needs the marker guard. A t-digest merge is weight-ADDITIVE — re-merging
-a replayed batch double-counts its samples — so here the WHOLE batch
-application sits behind the per-epoch marker directory (write-once
-discipline of streaming/index_stream.py): a replayed epoch is detected
-and skipped before any read or write. The exposure window is a crash
-between the store's manifest flip and the marker mkdir, in which case
-the epoch re-applies on replay and the affected hours' weights
-double-count until the next full recompute of those hours (the batch
-path `tdigest_tier` + upsert REPLACE repairs them); same convention and
-trade-off as index_stream's append marker, honestly wider in blast
-radius because nothing here is idempotent.
-
-Scale shape per micro-batch: one two-phase digest build over the batch
-(centroid-only shuffle), a store read pruned to the touched hours'
-partitions, one merge bounded by the touched-hour count, one manifest
-commit — O(batch + touched hours), never O(tier).
+A t-digest merge is weight-ADDITIVE, so re-merging a replayed batch
+would double-count its samples. The shared sink
+(``tier_sink.merge_into_tier``) commits the epoch id in the same
+manifest flip as the digests, and a replayed epoch is skipped before
+any read or write.
 """
 
 from __future__ import annotations
-
-import os
-import time
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.tdigest import tdigest_rollup, tdigest_tier
+from .tier_sink import merge_into_tier
 
 HOUR_US = 3_600_000_000
 
@@ -56,15 +40,9 @@ def streaming_tdigest_maintenance(
     """Start ``sample stream -> per-batch hour digests -> merge into the
     digest tier``. Returns the running query; callers own stop()."""
     series_col = store.series_cols[0]
-    marker_root = os.path.join(store.path(tier) + "_epochs")
 
-    def sink(batch: DataFrame, epoch_id: int) -> None:
-        marker = os.path.join(marker_root, str(epoch_id))
-        if os.path.exists(marker):
-            return  # replayed epoch: merge is additive, skip whole
-        if batch.isEmpty():
-            return
-        delta_tier = tdigest_tier(
+    def batch_digests(batch: DataFrame) -> DataFrame:
+        return tdigest_tier(
             batch.select(
                 F.lit(series).alias(series_col),
                 F.col(ts_col),
@@ -76,43 +54,14 @@ def streaming_tdigest_maintenance(
             value_col=value_col,
             delta=delta,
         )
-        hours = [
-            r["t_us"] for r in delta_tier.select("t_us").distinct().collect()
-        ]
-        if store.exists(tier):
-            old = store.read(tier).where(
-                (F.col(series_col) == series) & F.col("t_us").isin(hours)
-            ).select(series_col, "t_us", "digest", "n")
-            # out_us=1 rekey is the identity: plain per-hour digest merge
-            merged = tdigest_rollup(
-                old.unionByName(delta_tier),
-                1,
-                series_cols=(series_col,),
-                delta=delta,
-            )
-        else:
-            merged = delta_tier
-        store.upsert(merged, tier)
-        store.append_lineage(
-            tier,
-            [
-                {
-                    "run_id": f"tdigest-epoch-{epoch_id}",
-                    "tier": tier,
-                    "rows": len(hours),
-                    "ts": time.time(),
-                }
-            ],
-        )
-        os.makedirs(marker, exist_ok=True)
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+    def merge(rows: DataFrame) -> DataFrame:
+        # out_us=1 rekey is the identity: plain per-hour digest merge
+        return tdigest_rollup(rows, 1, series_cols=(series_col,), delta=delta)
+
+    return merge_into_tier(
+        stream, store, tier, checkpoint_dir, batch_digests, "tdigest",
+        series=series, merge=merge,
+        trigger_available_now=trigger_available_now,
+        processing_time=processing_time,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
