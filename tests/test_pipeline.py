@@ -1,6 +1,7 @@
 """End-to-end pipeline + spark-submit CLI entry point."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -28,6 +29,15 @@ class TestPipeline:
         packed = sorted(map(tuple, store.read_packed("hour").collect()))
         plain = sorted(map(tuple, store.read("hour").collect()))
         assert packed == plain
+        # every tier, packed siblings included, commits through one
+        # manifest: one file per version, no second current-snapshot copy
+        tiers = [*m["tiers"], "hour_packed"]
+        assert {"minute", "hour", "day"} <= set(tiers)
+        for t in tiers:
+            names = os.listdir(store.path(t))
+            assert "_manifests" in names and "_manifest.json" not in names, t
+        report = store.fsck("hour_packed")
+        assert report["ok"] and not report["orphans"], report
         # lineage recorded per tier
         assert len(store.read_lineage("hour")) >= 1
 
@@ -183,7 +193,7 @@ class TestEraseAndPublish:
         assert rc == 0
         m = _json.loads(buf.getvalue().strip().splitlines()[-1])
         assert m["minute"]["rows_deleted"] == 90
-        assert m["minute_packed"]["segments_deleted"] >= 1
+        assert m["minute_packed"]["rows_deleted"] >= 1  # u1's segments
         assert store.read("minute").where("url = 'u1'").count() == 0
         assert store.read_packed("minute").where("url = 'u1'").count() == 0
         # survivors intact in BOTH layouts
@@ -192,15 +202,49 @@ class TestEraseAndPublish:
 
     def test_erase_packed_only_segment_filter(self, spark, tmp_path):
         store = self._seed(spark, tmp_path)
-        out = store.erase_packed_series("minute", ["u0", "u1"])
-        assert out["segments_deleted"] >= 2
+        packed = store.packed_view()
+        out = packed.delete_series("minute_packed", ["u0", "u1"])
+        assert out["rows_deleted"] >= 2  # segment rows, no decode
         assert store.read_packed("minute").where(
             "url in ('u0','u1')"
         ).count() == 0
         assert store.read_packed("minute").count() == 90
+        assert store.read("minute").count() == 270  # long layout untouched
         # idempotent: second erase is a no-op
-        again = store.erase_packed_series("minute", ["u0", "u1"])
-        assert again["segments_deleted"] == 0
+        again = packed.delete_series("minute_packed", ["u0", "u1"])
+        assert again["rows_deleted"] == 0
+
+    def test_hard_erase_unlinks_packed_victim_segments(self, spark, tmp_path):
+        import pyarrow.parquet as pq
+
+        store = self._seed(spark, tmp_path)
+        base = store.path("minute_packed")
+
+        def urls_on_disk():
+            return {
+                u
+                for r, _, fs in os.walk(base)
+                for f in fs
+                if f.endswith(".parquet")
+                for u in pq.read_table(os.path.join(r, f), columns=["url"])
+                .column("url")
+                .to_pylist()
+            }
+
+        # hard: no parquet file under minute_packed holds a victim segment
+        pipeline.erase_urls(store, ["u0"], tiers=("minute",), hard=True)
+        assert urls_on_disk() == {"u1", "u2"}
+        assert store.read_packed("minute").count() == 180
+        # a default erase is a soft snapshot commit: the victim's
+        # segments stay in trash for the time-travel grace
+        packed = store.packed_view()
+        v = packed.current_version("minute_packed")
+        pipeline.erase_urls(store, ["u1"], tiers=("minute",))
+        assert "u1" in urls_on_disk()
+        assert packed.read("minute_packed", as_of_version=v).where(
+            "url = 'u1'"
+        ).count() >= 1
+        assert store.read_packed("minute").count() == 90
 
     def test_publish_cli_flips_all_tiers(self, spark, tmp_path):
         store = self._seed(spark, tmp_path)

@@ -289,12 +289,26 @@ class TestOneUrlRead:
         df = get_timeseries(
             store, "hour", self.START, self.END, urls=["u3"], use_packed=True
         )
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        # the segment-start bounds come first in PushedFilters: print the
+        # scan metadata untruncated so the url predicate shows
+        conf = store.spark.conf
+        conf.set("spark.sql.maxMetadataStringLength", "1000")
+        try:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+        finally:
+            conf.unset("spark.sql.maxMetadataStringLength")
         assert plan.count("MapInPandas") == 1, plan
-        # the scan keeps only u3's bucket dir, and the url predicate
-        # reaches parquet below the decode
+        # the plan keeps only u3's bucket files, exactly those the
+        # manifest pruning names (the packed read widens its start by one
+        # segment: a day-1 segment holds the range's first points), and
+        # the url predicate reaches parquet below the decode
+        files = df.inputFiles()
         (b,) = store._buckets_of(["u3"])
-        assert re.search(rf"PartitionFilters: [^\n]*\(p_bucket#\d+ = {b}\)", plan), plan
+        assert files and all(f"/p_bucket={b}/" in f for f in files), files
+        explained = store.explain_read(
+            "hour_packed", self.START - self.DAY + 1, self.END, series=["u3"]
+        )
+        assert len(files) == explained["scanned"] < explained["files_total"]
         assert re.search(r"PushedFilters: [^\n]*EqualTo\(url,u3\)", plan), plan
 
     def test_packed_equals_long_row_for_row(self, store):

@@ -59,13 +59,31 @@ class TestPackedStore:
         assert got[0] == T0 + HOUR + 30 * MIN and got[-1] == T0 + 3 * HOUR - MIN
         assert len(got) == 90
         # pruning reaches the parquet scan: only segments overlapping the
-        # range survive the pushed seg_start_us filters
+        # range survive the pushed filters on the segment start (t_us)
         segs = spark.read.parquet(store.path("minute_packed"))
         pruned = segs.where(
-            (F.col("seg_start_us") > T0 + 30 * MIN) &
-            (F.col("seg_start_us") <= T0 + 3 * HOUR - MIN)
+            (F.col("t_us") > T0 + 30 * MIN) &
+            (F.col("t_us") <= T0 + 3 * HOUR - MIN)
         )
         assert pruned.count() < segs.count()
+
+    def test_packed_tier_is_a_snapshot_tier(self, spark, store):
+        rows = minute_rows(2)
+        first = sorted(rows)
+        changed = [(u, c, t, v + 1.0) for u, c, t, v in rows]
+        store.write_packed(mk(spark, rows), "minute", segment_us=HOUR)
+        assert len(store.versions("minute_packed")) == 1
+        v1 = store.current_version("minute_packed")
+        planned = store.read_packed("minute")  # against snapshot v1
+        store.write_packed(mk(spark, changed), "minute", segment_us=HOUR)
+        assert store.versions("minute_packed") == [v1, v1 + 1]
+        # the frame planned before the second write keeps its snapshot
+        assert sorted(map(tuple, planned.collect())) == first
+        now = sorted(map(tuple, store.read_packed("minute").collect()))
+        assert now == sorted(changed)
+        store.rollback("minute_packed", v1)
+        back = sorted(map(tuple, store.read_packed("minute").collect()))
+        assert back == first
 
     def test_compression_beats_long_layout(self, spark, store):
         import os

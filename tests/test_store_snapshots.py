@@ -103,6 +103,28 @@ class TestSnapshotIsolation:
         store.write(mk(spark, [("u", "text_len", T0, 7.0)]), "minute")
         assert not os.path.exists(orphan)
 
+    def test_first_write_crash_debris_never_goes_live(
+        self, spark, store, monkeypatch
+    ):
+        # a first write that dies before its flip leaves parquet files and
+        # no manifest: they stay invisible and the next commit sweeps them
+        def crash(*_a, **_k):
+            raise RuntimeError("writer died before the manifest flip")
+
+        with monkeypatch.context() as mp:
+            mp.setattr(TierStore, "_commit_append", crash)
+            with pytest.raises(RuntimeError):
+                store.write(mk(spark, minute_rows(1)[:5]), "minute")
+        base = store.path("minute")
+        debris = glob.glob(f"{base}/p_date=*/p_bucket=*/*.parquet")
+        assert debris and store.versions("minute") == []
+        assert store.read("minute").count() == 0
+        day2 = T0 + 24 * HOUR
+        other = [("v", "text_len", day2 + i * MIN, float(i)) for i in range(3)]
+        store.write(mk(spark, other), "minute")
+        assert sorted(map(tuple, store.read("minute").collect())) == other
+        assert not [f for f in debris if os.path.exists(f)]
+
     def test_manifest_version_advances(self, spark, store):
         store.write(mk(spark, minute_rows(1)), "minute")
         base = store.path("minute")

@@ -40,8 +40,15 @@ def rows_of(df):
     return sorted(map(tuple, df.collect()))
 
 
+def manifest_path(store, tier):
+    """The current snapshot: the newest ``_manifests/v<N>.json``."""
+    return os.path.join(
+        store.path(tier), "_manifests", f"v{store.versions(tier)[-1]}.json"
+    )
+
+
 def manifest(store, tier):
-    with open(os.path.join(store.path(tier), "_manifest.json")) as f:
+    with open(manifest_path(store, tier)) as f:
         return json.load(f)
 
 
@@ -151,7 +158,7 @@ class TestBackwardCompat:
         store.write(mk(spark, day_rows(3, hours=1)), "minute")
         expected = rows_of(store.read("minute").where(F.col("url") == "u01"))
         # simulate a manifest written before stats existed
-        mp = os.path.join(store.path("minute"), "_manifest.json")
+        mp = manifest_path(store, "minute")
         with open(mp) as f:
             m = json.load(f)
         m.pop("stats")

@@ -206,9 +206,9 @@ def apply_retention(
     for tier, keep in retention_us.items():
         if store.exists(tier):
             dropped[tier] = store.expire_before(tier, now_us - keep)
-        # packed siblings share the tier's retention horizon: segment
-        # p_date partitions drop on the same cutoff (write_packed keeps
-        # the same partition spec precisely so this applies unchanged)
+        # packed siblings share the tier's retention horizon: their
+        # segment p_date partitions drop through the same manifest
+        # retention commit (write_packed keeps the partition spec)
         if store.exists(f"{tier}_packed"):
             dropped[f"{tier}_packed"] = store.expire_before(
                 f"{tier}_packed", now_us - keep
@@ -224,17 +224,22 @@ def erase_urls(
 ) -> dict:
     """Right-to-be-forgotten across the WHOLE cascade: every long-layout
     tier drops the victim series via the bucket-pruned copy-on-write
-    delete (``delete_series``; ``hard=True`` physically unlinks now),
-    and every packed sibling drops the victim SEGMENT rows without any
-    Gorilla decode (``erase_packed_series``). One entry point so an
-    erasure request cannot miss a derived tier — the operational gap
-    audits actually flag."""
+    delete (``delete_series``), and every packed sibling drops the victim
+    SEGMENT rows through the same ``delete_series`` on the store's
+    ``packed_view`` — segment filtering, no Gorilla decode. On both
+    layouts the default is a soft snapshot commit (the replaced files
+    stay in trash for the time-travel grace); ``hard=True`` physically
+    unlinks them now. One entry point so an erasure request cannot miss
+    a derived tier — the operational gap audits actually flag."""
     out: dict = {}
+    packed = store.packed_view()
     for t in tiers:
         if store.exists(t):
             out[t] = store.delete_series(t, urls, hard=hard)
         if store.exists(f"{t}_packed"):
-            out[f"{t}_packed"] = store.erase_packed_series(t, urls)
+            out[f"{t}_packed"] = packed.delete_series(
+                f"{t}_packed", urls, hard=hard
+            )
     return out
 
 

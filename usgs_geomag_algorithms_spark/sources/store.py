@@ -7,9 +7,11 @@ same operational surface on plain parquet plus a tiny manifest layer:
 - partition spec ``(p_date, p_bucket)`` — days(bucket_ts) × bucket(url-hash)
   — the layout the 100 TB deployment would declare as an Iceberg partition
   spec; ``p_bucket`` spreads hot domains (salting knob ``n_buckets``)
-- **snapshot manifest** (``_manifest.json`` per tier, atomically replaced):
-  the set of LIVE data files at the current version. Writers only ever
-  APPEND uniquely-named files and then flip the manifest; replaced files
+- **snapshot manifest** (``_manifests/v<N>.json`` per tier, one
+  immutable file per version; the newest is the current snapshot and its
+  atomic ``os.replace`` is the commit's flip): the set of LIVE data files
+  at that version. Writers only ever APPEND uniquely-named files and
+  then flip the manifest; replaced files
   move to a trash list and are physically deleted only after a grace of
   ``GC_GRACE_VERSIONS`` more versions — so a reader that resolved the
   manifest keeps valid file paths while any number of writes, compactions,
@@ -17,7 +19,9 @@ same operational surface on plain parquet plus a tiny manifest layer:
   down; at 10^12 rows the same roles are played by Iceberg manifests +
   ``expire_snapshots``). Commits serialize on one kernel-held lock per
   tier (``functions/filelock.py``); a writer that dies mid-commit
-  releases it with its process, so a crash never wedges the tier.
+  releases it with its process, so a crash never wedges the tier. A
+  directory with no manifest holds no snapshot and reads as empty; the
+  next commit's listing sweep removes whatever a crashed write left there.
 - **exactly-once sinks**: a streaming sink passes ``txn=(sink_id,
   epoch)`` to :meth:`TierStore.write`/:meth:`TierStore.upsert`; the
   manifest's ``txns`` map records the last epoch each sink committed,
@@ -35,8 +39,10 @@ same operational surface on plain parquet plus a tiny manifest layer:
 Reads prune twice: the manifest file list is pruned driver-side on the
 ``p_date`` path component before Spark ever sees it, and the surviving
 scan still carries the partition-column predicates (verified in tests via
-the file-source plan). Packed segment tiers keep the legacy directory
-layout (whole-dir rewrite; documented non-concurrent)."""
+the file-source plan). The Gorilla-packed sibling tiers (``<tier>_packed``)
+are ordinary manifest tiers with a segment value schema (see
+:meth:`TierStore.write_packed`): every tier commits through the same
+snapshot path."""
 
 from __future__ import annotations
 
@@ -174,11 +180,24 @@ class TierStore:
         return f"{self.root}/{tier}"
 
     # --------------------------------------------------------- manifest
-    def _manifest_path(self, base: str) -> str:
-        return f"{base}/_manifest.json"
-
     def _manifest_version_path(self, base: str, version: int) -> str:
         return f"{base}/_manifests/v{version}.json"
+
+    @staticmethod
+    def _listed_versions(base: str) -> list[int]:
+        """Snapshot versions with a manifest file under ``base``
+        (ascending); the last one is the current snapshot."""
+        hist = os.path.join(base, "_manifests")
+        if not os.path.isdir(hist):
+            return []
+        out = []
+        for fn in os.listdir(hist):
+            if fn.startswith("v") and fn.endswith(".json"):
+                try:
+                    out.append(int(fn[1:-5]))
+                except ValueError:
+                    pass
+        return sorted(out)
 
     # -------------------------------------------------- named refs (tags)
     def _refs_path(self, base: str) -> str:
@@ -255,14 +274,7 @@ class TierStore:
             m = self._load_manifest(base)
             if m is None:
                 raise TimeTravelError(f"tier {tier!r} has no snapshot")
-            vp = self._manifest_version_path(base, to_version)
-            if not os.path.exists(vp):
-                raise TimeTravelError(
-                    f"tier {tier!r} snapshot v{to_version} is not "
-                    f"resolvable (resolvable: {self.versions(tier)})"
-                )
-            with open(vp) as f:
-                tm = json.load(f)
+            tm = self._version_manifest(tier, to_version)
             target = set(tm["files"])
             tdels = tm.get("deletes", [])
             missing = [
@@ -312,10 +324,8 @@ class TierStore:
         versions = set(self._load_refs(base).values())
         files: set[str] = set()
         for v in versions:
-            vp = self._manifest_version_path(base, v)
-            if os.path.exists(vp):
-                with open(vp) as f:
-                    vm = json.load(f)
+            vm = self._load_manifest(base, v)
+            if vm is not None:
                 files.update(vm.get("files", []))
                 # a tagged snapshot's equality-delete files are part of
                 # its logical state — resolving the tag must keep masking
@@ -333,18 +343,34 @@ class TierStore:
         by hand."""
         return commit_lock(base, self.lock_wait_s, ConcurrentWriterError)
 
-    def _load_manifest(self, base: str) -> dict | None:
-        p = self._manifest_path(base)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+    def _load_manifest(self, base: str, version: int | None = None) -> dict | None:
+        """The snapshot manifest at ``version`` (default: the current one,
+        the newest ``_manifests/v<N>.json``); None when it does not exist.
+
+        A lock-free reader can race history pruning between listing the
+        directory and opening the file it picked. Pruning only removes
+        versions older than a newer one, so on ``FileNotFoundError`` the
+        current-snapshot lookup lists again (and finds that newer version)
+        rather than falling back to an older snapshot."""
+        while True:
+            if version is None:
+                listed = self._listed_versions(base)
+                if not listed:
+                    return None
+                v = listed[-1]
+            else:
+                v = version
+            try:
+                with open(self._manifest_version_path(base, v)) as f:
+                    return json.load(f)
+            except FileNotFoundError:
+                if version is not None:
+                    return None
 
     def _save_manifest(self, base: str, m: dict) -> None:
-        # version-history copy FIRST (Iceberg metadata-file analog): time
-        # travel resolves these; written before the flip so a crash
-        # between the two writes can only lose the (unreferenced) history
-        # entry, never leave a current manifest without its snapshot
+        # one immutable file per version (Iceberg metadata-file analog):
+        # its atomic rename is the snapshot flip, since the newest version
+        # file is the current snapshot and versions only move forward
         vp = self._manifest_version_path(base, m["version"])
         os.makedirs(os.path.dirname(vp), exist_ok=True)
         with open(vp + ".tmp", "w") as f:
@@ -355,30 +381,20 @@ class TierStore:
         # EXCEPT tagged snapshots, whose files GC also preserves
         cutoff = m["version"] - self.GC_GRACE_VERSIONS
         tagged, _ = self._tag_protected(base)
-        hist_dir = os.path.dirname(vp)
-        for fn in os.listdir(hist_dir):
-            if fn.startswith("v") and fn.endswith(".json"):
-                try:
-                    v = int(fn[1:-5])
-                    if v < cutoff and v not in tagged:
-                        os.remove(os.path.join(hist_dir, fn))
-                except ValueError:
-                    pass
-        tmp = self._manifest_path(base) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, sort_keys=True)
-        os.replace(tmp, self._manifest_path(base))  # atomic snapshot flip
+        for v in self._listed_versions(base):
+            if v < cutoff and v not in tagged:
+                os.remove(self._manifest_version_path(base, v))
 
     @staticmethod
-    def _list_parquet(base: str) -> set[str]:
+    def _list_parquet(tier_dir: str) -> set[str]:
         out = set()
-        for root, dirs, files in os.walk(base):
-            rel = os.path.relpath(root, base)
+        for root, dirs, files in os.walk(tier_dir):
+            rel = os.path.relpath(root, tier_dir)
             if rel == ".":
                 # equality-delete files live under _deletes/ and are
                 # tracked by the manifest's "deletes" list, never the data
-                # file list — a legacy-directory adoption or a write()'s
-                # before/after diff must not see them as data files
+                # file list — a write()'s before/after diff must not see
+                # them as data files
                 dirs[:] = [d for d in dirs if d != "_deletes"]
             for fn in files:
                 if fn.endswith(".parquet"):
@@ -708,10 +724,6 @@ class TierStore:
                     # dirs we actually touch is checked after the append
                     conflict_dirs = self._changed_dirs(_based_on, m)
             before = self._list_parquet(base)
-            if m is None and before:
-                # adopt a legacy (pre-manifest) directory: every existing
-                # file is live at version 0, so untouched partitions survive
-                m = {"version": 0, "files": sorted(before), "trash": {}}
             mixed = "_pb" in df.columns
             if m is not None and not mixed:
                 # dynamic overwrite is ill-defined across a partition-spec
@@ -819,10 +831,8 @@ class TierStore:
         collected (bounded: dates x buckets) and the manifest's file list
         is filtered to those directories driver-side — a one-day upsert
         into a years-deep tier reads one day, not the tier (the scan-scope
-        property Iceberg's MERGE INTO gets from its manifests). The
-        remaining semi-join guards the legacy no-manifest path, where only
-        directory listing is available. ``txn`` is passed to
-        :meth:`write` (exactly-once sink epochs)."""
+        property Iceberg's MERGE INTO gets from its manifests). ``txn`` is
+        passed to :meth:`write` (exactly-once sink epochs)."""
         if not self.exists(tier):
             self.write(df, tier, txn=txn)
             return
@@ -954,9 +964,9 @@ class TierStore:
         base = self.path(tier)
         with self._commit_lock(base):
             m = self._load_manifest(base)
-            before = self._list_parquet(base)
             if m is None:
-                m = {"version": 0, "files": sorted(before), "trash": {}}
+                return zero
+            before = self._list_parquet(base)
             # victim dirs under EVERY spec the tier has been bucketed
             # with — after an evolution the keys' history spans both
             # layouts (mixed upsert files share those dir names too)
@@ -1026,85 +1036,6 @@ class TierStore:
             "rows_deleted": n_victim_rows - n_remaining,
         }
 
-    def erase_packed_series(self, tier: str, keys: Sequence[str]) -> dict:
-        """GDPR erasure on a packed sibling tier: drop the victim series'
-        SEGMENT rows — segment filtering only, no Gorilla decode or
-        re-encode, pruned to the victim buckets. Packed tiers keep the
-        legacy directory layout (documented non-concurrent; no spec
-        evolution — the store-level bucket count applies): surviving
-        segments are materialized (checkpoint) BEFORE the partition
-        overwrite so the rewrite never reads files it is replacing, and
-        partitions left fully victim are removed explicitly (dynamic
-        overwrite cannot express an emptied partition)."""
-        import shutil
-
-        base = self.path(f"{tier}_packed")
-        zero = {"segments_deleted": 0, "partitions_rewritten": 0}
-        keys = list(dict.fromkeys(keys))
-        if not keys or not os.path.exists(base):
-            return zero
-        key_col = self.series_cols[0]
-        meta_path = f"{base}/_segment_meta.json"
-        nb = self.n_buckets
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                nb = int(json.load(f).get("n_buckets", nb))
-        buckets = self._buckets_of(keys, n_buckets=nb)
-        vdirs = []
-        for dd in os.listdir(base):
-            if not dd.startswith("p_date="):
-                continue
-            for bb in os.listdir(os.path.join(base, dd)):
-                if bb.startswith("p_bucket="):
-                    try:
-                        if int(bb.split("=", 1)[1]) in buckets:
-                            vdirs.append(f"{dd}/{bb}")
-                    except ValueError:
-                        pass
-        if not vdirs:
-            return zero
-        segs = self.spark.read.option("basePath", base).parquet(
-            *[f"{base}/{d}" for d in vdirs]
-        )
-        if len(keys) <= self.MAX_LITERAL_DELETE_KEYS:
-            n_vic = segs.where(F.col(key_col).isin(keys)).count()
-            rem = segs.where(~F.col(key_col).isin(keys))
-        else:
-            kd = self.spark.createDataFrame(
-                [(k,) for k in keys], f"{key_col} string"
-            )
-            n_vic = segs.join(F.broadcast(kd), key_col, "left_semi").count()
-            rem = segs.join(F.broadcast(kd), key_col, "left_anti")
-        if n_vic == 0:
-            return zero
-        remaining = rem.localCheckpoint()
-        # partition discovery infers p_date as DATE — compare as strings
-        # or the emptied-partition sweep would remove rewritten dirs
-        rem_parts = {
-            (r.d, int(r.b))
-            for r in remaining.select(
-                F.col("p_date").cast("string").alias("d"),
-                F.col("p_bucket").cast("int").alias("b"),
-            )
-            .distinct()
-            .collect()
-        }
-        if rem_parts:
-            (
-                remaining.write.mode("overwrite")
-                .partitionBy("p_date", "p_bucket")
-                .parquet(base)
-            )
-        for d in vdirs:
-            dd, bb = d.split("/")
-            part = (dd.split("=", 1)[1], int(bb.split("=", 1)[1]))
-            if part not in rem_parts:
-                shutil.rmtree(f"{base}/{d}", ignore_errors=True)
-        return {
-            "segments_deleted": n_vic,
-            "partitions_rewritten": len(rem_parts),
-        }
-
     # ------------------------------------------- merge-on-read deletes
     def delete_rows(self, df: DataFrame, tier: str) -> dict:
         """Merge-on-read row-level delete (Iceberg v2 equality-delete
@@ -1125,8 +1056,11 @@ class TierStore:
         snapshot still sees the rows, and :meth:`changelog` spanning the
         delete commit emits the masked rows as ``op='delete'``.
         :meth:`materialize_deletes` (or a full :meth:`compact`) retires
-        the delete files once applied. Not supported on packed tiers
-        (``read_packed`` bypasses the row mask).
+        the delete files once applied. Refused on packed tiers: they
+        commit through the manifest too, but hold one row per SEGMENT, so
+        a point key would mask nothing — erase whole series there with
+        ``packed_view().delete_series`` or rewrite with
+        :meth:`write_packed`.
 
         Returns ``{"keys", "version"}`` (0 keys commits nothing)."""
         import shutil
@@ -1134,8 +1068,9 @@ class TierStore:
 
         if tier.endswith("_packed"):
             raise ValueError(
-                "delete_rows() operates on long-layout tiers; packed "
-                "tiers are rewritten by write_packed"
+                "delete_rows() masks point keys of long-layout tiers; "
+                "packed tiers hold segments (use packed_view()"
+                ".delete_series or write_packed)"
             )
         if not self.exists(tier):
             return {"keys": 0, "version": 0}
@@ -1148,8 +1083,7 @@ class TierStore:
         with self._commit_lock(base):
             m = self._load_manifest(base)
             if m is None:
-                before = self._list_parquet(base)
-                m = {"version": 0, "files": sorted(before), "trash": {}}
+                return zero
             tmp = os.path.join(ddir, f".tmp-{uuid.uuid4().hex}")
             kd.coalesce(1).write.mode("overwrite").parquet(tmp)
             part = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
@@ -1187,8 +1121,7 @@ class TierStore:
         with self._commit_lock(base):
             m = self._load_manifest(base)
             if m is None:
-                before = self._list_parquet(base)
-                m = {"version": 0, "files": sorted(before), "trash": {}}
+                raise TimeTravelError(f"tier {tier!r} has no snapshot")
             specs = self._tier_specs(m)
             if specs[-1] == int(n_buckets):
                 return m.get("version", 0)
@@ -1301,28 +1234,19 @@ class TierStore:
         self, tier: str, keys: set, with_bucket: bool = False
     ) -> DataFrame:
         """Read exactly the given (p_date, p_bucket) partitions of a tier
-        (manifest file-list pruning; directory pruning on legacy tiers).
-        ``with_bucket`` keeps each row's physical p_bucket as ``_pb`` —
-        upsert provenance across a partition-spec evolution."""
+        (manifest file-list pruning). ``with_bucket`` keeps each row's
+        physical p_bucket as ``_pb`` — upsert provenance across a
+        partition-spec evolution."""
         base = self.path(tier)
         dirs = {f"p_date={d}/p_bucket={b}" for d, b in keys}
         m = self._load_manifest(base)
-        if m is not None:
-            files = [f for f in m["files"] if os.path.dirname(f) in dirs]
-            if not files:
-                df = self._empty()
-            else:
-                # deletes applied HERE so upsert's read-modify-write
-                # rewrites the partition without the masked rows — the
-                # rewrite (new sequence number) materializes the delete
-                # instead of resurrecting it
-                df = self._read_live(base, m, files)
-        else:
-            paths = [f"{base}/{d}" for d in dirs if os.path.exists(f"{base}/{d}")]
-            if not paths:
-                df = self._empty()
-            else:
-                df = self.spark.read.option("basePath", base).parquet(*paths)
+        files = [
+            f for f in (m or {}).get("files", []) if os.path.dirname(f) in dirs
+        ]
+        # deletes applied HERE so upsert's read-modify-write rewrites the
+        # partition without the masked rows — the rewrite (new sequence
+        # number) materializes the delete instead of resurrecting it
+        df = self._read_live(base, m, files) if files else self._empty()
         cols = [*self.series_cols, "t_us", *self.value_cols]
         if with_bucket:
             pb = (
@@ -1457,17 +1381,114 @@ class TierStore:
     def versions(self, tier: str) -> list[int]:
         """Resolvable snapshot versions (ascending) — the time-travel
         window: current and up to ``GC_GRACE_VERSIONS`` predecessors."""
-        hist = os.path.join(self.path(tier), "_manifests")
-        if not os.path.isdir(hist):
-            return []
-        out = []
-        for fn in os.listdir(hist):
-            if fn.startswith("v") and fn.endswith(".json"):
-                try:
-                    out.append(int(fn[1:-5]))
-                except ValueError:
-                    pass
-        return sorted(out)
+        return self._listed_versions(self.path(tier))
+
+    @staticmethod
+    def _day(t_us: int) -> str:
+        """The ``p_date`` partition value of timestamp ``t_us``."""
+        return time.strftime("%Y-%m-%d", time.gmtime(int(t_us) // US))
+
+    @staticmethod
+    def _series_keys(series: str | Sequence[str] | None) -> list[str] | None:
+        if series is None:
+            return None
+        return [series] if isinstance(series, str) else sorted(set(series))
+
+    def _pruner(
+        self,
+        m: dict,
+        start_us: int | None,
+        end_us: int | None,
+        keys: list[str] | None,
+    ):
+        """Driver-side file pruning of snapshot ``m`` for a read of
+        ``[start_us, end_us]`` over series ``keys``. Returns ``why(f)``:
+        None when live file ``f`` must be scanned, else the test that
+        prunes it — ``"date"`` (its ``p_date`` path component),
+        ``"bucket"`` (the keys' ``p_bucket`` under the spec that laid the
+        file out) or ``"bounds"`` (the t_us / series bounds the commit
+        recorded from its parquet footer). :meth:`read` scans the files
+        it keeps; :meth:`explain_read` counts the reasons."""
+        lo = int(start_us) if start_us is not None else None
+        hi = int(end_us) if end_us is not None else None
+        d0 = self._day(lo) if lo is not None else None
+        d1 = self._day(hi) if hi is not None else None
+        by_spec = self._buckets_by_spec(m, keys) if keys is not None else None
+        any_spec = set().union(*by_spec.values()) if by_spec else set()
+        stats = m.get("stats", {})
+        spec_map = m.get("spec", {})
+
+        def why(f: str) -> str | None:
+            pd = self._pdate_of(f)
+            if pd is not None and (
+                (d0 is not None and pd < d0) or (d1 is not None and pd > d1)
+            ):
+                return "date"
+            if by_spec is not None:
+                # across an evolution old files keep pruning under their
+                # original modulus; spec -1 (mixed provenance upsert
+                # file) tests the union of every spec's buckets
+                sid = int(spec_map.get(f, 0))
+                buckets = by_spec.get(sid, any_spec) if sid >= 0 else any_spec
+                pb = self._pbucket_of(f)
+                if pb is not None and pb not in buckets:
+                    return "bucket"
+            st = stats.get(f)
+            if st:
+                t_min, t_max, s_min, s_max = st[0], st[1], st[2], st[3]
+                if (
+                    (lo is not None and t_max is not None and t_max < lo)
+                    or (hi is not None and t_min is not None and t_min > hi)
+                    or (
+                        keys is not None
+                        and s_min is not None
+                        and not any(s_min <= k <= s_max for k in keys)
+                    )
+                ):
+                    return "bounds"
+            return None
+
+        return why
+
+    def _scan(
+        self,
+        base: str,
+        m: dict | None,
+        start_us: int | None,
+        end_us: int | None,
+        keys: list[str] | None,
+    ) -> DataFrame:
+        """Scan snapshot ``m``'s live files that survive :meth:`_pruner`
+        (pruned driver-side before Spark lists anything), with the range
+        and key predicates also pushed into the parquet scan."""
+        if m is None or (keys is not None and not keys):
+            return self._empty()
+        why = self._pruner(m, start_us, end_us, keys)
+        files = [f for f in m["files"] if why(f) is None]
+        if not files:
+            return self._empty()
+        df = self._read_live(base, m, files)
+        if start_us is not None:
+            df = df.where(F.col("p_date") >= self._day(start_us)).where(
+                F.col("t_us") >= int(start_us)
+            )
+        if end_us is not None:
+            df = df.where(F.col("p_date") <= self._day(end_us)).where(
+                F.col("t_us") <= int(end_us)
+            )
+        if keys is not None:
+            key_col = self.series_cols[0]
+            if len(keys) <= self.MAX_LITERAL_DELETE_KEYS:
+                # literal isin: pushed to the parquet scan, so parquet
+                # row-group stats prune WITHIN the surviving files too
+                # (compaction clusters rows on (series, t_us))
+                df = df.where(F.col(key_col).isin(keys))
+            else:
+                keys_df = self.spark.createDataFrame(
+                    [(k,) for k in keys], f"{key_col} string"
+                )
+                df = df.join(F.broadcast(keys_df), key_col, "left_semi")
+        return df.select(*self.series_cols, "t_us", *self.value_cols)
 
     def read(
         self,
@@ -1484,7 +1505,8 @@ class TierStore:
         :meth:`versions` resolves to a consistent historical view.
         Older versions raise :class:`TimeTravelError`.  ``tag`` resolves
         a named ref (:meth:`tag`) — tagged snapshots resolve indefinitely
-        (their manifests and files are GC-pinned).
+        (their manifests and files are GC-pinned). A tier with no
+        manifest reads as empty.
 
         ``series`` restricts the read to the given series key(s) — the
         reference's per-observatory fetch (``TimeseriesFactory
@@ -1517,113 +1539,10 @@ class TierStore:
                 return self._empty()
             as_of_version = refs[self.read_ref]
         if as_of_version is not None:
-            vp = self._manifest_version_path(base, as_of_version)
-            if not os.path.exists(vp):
-                raise TimeTravelError(
-                    f"tier {tier!r} snapshot v{as_of_version} is not "
-                    f"resolvable (resolvable: {self.versions(tier)})"
-                )
-            with open(vp) as f:
-                m = json.load(f)
+            m = self._version_manifest(tier, as_of_version)
         else:
             m = self._load_manifest(base)
-        d0 = (
-            time.strftime("%Y-%m-%d", time.gmtime(start_us // US))
-            if start_us is not None
-            else None
-        )
-        d1 = (
-            time.strftime("%Y-%m-%d", time.gmtime(end_us // US))
-            if end_us is not None
-            else None
-        )
-        keys = (
-            [series]
-            if isinstance(series, str)
-            else sorted(set(series))
-            if series is not None
-            else None
-        )
-        if keys is not None and not keys:
-            return self._empty()
-        if m is not None:
-            # snapshot read: exactly the manifest's live files, pruned
-            # driver-side before Spark ever lists anything — on the
-            # p_date path component, on the requested keys' p_bucket
-            # dirs, and on the per-file column bounds the commit recorded
-            # from the parquet footers (t_us range, series range)
-            by_spec = (
-                self._buckets_by_spec(m, keys) if keys is not None else None
-            )
-            stats = m.get("stats", {})
-            spec_map = m.get("spec", {})
-
-            def _live(f: str) -> bool:
-                pd = self._pdate_of(f)
-                if pd is not None:
-                    if (d0 is not None and pd < d0) or (
-                        d1 is not None and pd > d1
-                    ):
-                        return False
-                if by_spec is not None:
-                    pb = self._pbucket_of(f)
-                    # test the file's bucket under the spec that laid it
-                    # out — across an evolution old files keep pruning
-                    # correctly under their original modulus; spec -1
-                    # (mixed provenance upsert file) tests the union
-                    sid = int(spec_map.get(f, 0))
-                    if sid < 0 or sid not in by_spec:
-                        buckets = set().union(*by_spec.values())
-                    else:
-                        buckets = by_spec[sid]
-                    if pb is not None and pb not in buckets:
-                        return False
-                st = stats.get(f)
-                if st:
-                    t_min, t_max, s_min, s_max = st[0], st[1], st[2], st[3]
-                    if start_us is not None and t_max is not None:
-                        if t_max < int(start_us):
-                            return False
-                    if end_us is not None and t_min is not None:
-                        if t_min > int(end_us):
-                            return False
-                    if keys is not None and s_min is not None:
-                        if not any(s_min <= k <= s_max for k in keys):
-                            return False
-                return True
-
-            files = [f for f in m["files"] if _live(f)]
-            if not files:
-                return self._empty()
-            df = self._read_live(base, m, files)
-        else:
-            # legacy directory read (tier written by an external tool)
-            has_data = any(
-                True
-                for _root, _dirs, fs in os.walk(base)
-                for f in fs
-                if f.endswith(".parquet")
-            )
-            if not has_data:
-                return self._empty()
-            df = self.spark.read.parquet(base)
-        if start_us is not None:
-            df = df.where(F.col("p_date") >= d0).where(F.col("t_us") >= int(start_us))
-        if end_us is not None:
-            df = df.where(F.col("p_date") <= d1).where(F.col("t_us") <= int(end_us))
-        if keys is not None:
-            key_col = self.series_cols[0]
-            if len(keys) <= self.MAX_LITERAL_DELETE_KEYS:
-                # literal isin: pushed to the parquet scan, so parquet
-                # row-group stats prune WITHIN the surviving files too
-                # (compaction clusters rows on (series, t_us))
-                df = df.where(F.col(key_col).isin(keys))
-            else:
-                keys_df = self.spark.createDataFrame(
-                    [(k,) for k in keys], f"{key_col} string"
-                )
-                df = df.join(F.broadcast(keys_df), key_col, "left_semi")
-        return df.select(*self.series_cols, "t_us", *self.value_cols)
+        return self._scan(base, m, start_us, end_us, self._series_keys(series))
 
     def explain_read(
         self,
@@ -1638,33 +1557,13 @@ class TierStore:
         bounds) — the observability hook an operator checks before
         blaming Spark for a slow range read. Also reports pending
         equality deletes (files that will pay the mask anti-join).
-        Metadata only; no Spark job except the key-bucket hash."""
+        Metadata only; no Spark job. Works on packed tiers too, whose
+        ``t_us`` is the segment start: :meth:`read_packed` plans with its
+        start widened by one segment width."""
         base = self.path(tier)
-        m = self._load_manifest(base) if os.path.exists(base) else None
+        m = self._load_manifest(base)
         if m is None:
             return {"tier": tier, "files_total": 0, "scanned": 0}
-        d0 = (
-            time.strftime("%Y-%m-%d", time.gmtime(start_us // US))
-            if start_us is not None
-            else None
-        )
-        d1 = (
-            time.strftime("%Y-%m-%d", time.gmtime(end_us // US))
-            if end_us is not None
-            else None
-        )
-        keys = (
-            [series]
-            if isinstance(series, str)
-            else sorted(set(series))
-            if series is not None
-            else None
-        )
-        by_spec = (
-            self._buckets_by_spec(m, keys) if keys is not None else None
-        )
-        stats = m.get("stats", {})
-        spec_map = m.get("spec", {})
         seq = m.get("seq", {})
         dels = m.get("deletes", [])
         max_dv = max((int(e["version"]) for e in dels), default=0)
@@ -1678,46 +1577,12 @@ class TierStore:
             "masked_scan": 0,
             "pending_delete_files": len(dels),
         }
+        why = self._pruner(m, start_us, end_us, self._series_keys(series))
         for f in m["files"]:
-            pd = self._pdate_of(f)
-            if pd is not None and (
-                (d0 is not None and pd < d0) or (d1 is not None and pd > d1)
-            ):
-                out["pruned_date"] += 1
+            reason = why(f)
+            if reason is not None:
+                out[f"pruned_{reason}"] += 1
                 continue
-            if by_spec is not None:
-                pb = self._pbucket_of(f)
-                sid = int(spec_map.get(f, 0))
-                buckets = (
-                    set().union(*by_spec.values())
-                    if sid < 0 or sid not in by_spec
-                    else by_spec[sid]
-                )
-                if pb is not None and pb not in buckets:
-                    out["pruned_bucket"] += 1
-                    continue
-            st = stats.get(f)
-            if st:
-                t_min, t_max = st[0], st[1]
-                if (
-                    start_us is not None
-                    and t_max is not None
-                    and t_max < int(start_us)
-                ) or (
-                    end_us is not None
-                    and t_min is not None
-                    and t_min > int(end_us)
-                ):
-                    out["pruned_bounds"] += 1
-                    continue
-                s_min, s_max = st[2], st[3]
-                if (
-                    keys is not None
-                    and s_min is not None
-                    and not any(s_min <= k <= s_max for k in keys)
-                ):
-                    out["pruned_bounds"] += 1
-                    continue
             out["scanned"] += 1
             if int(seq.get(f, 0)) < max_dv:
                 out["masked_scan"] += 1
@@ -1725,15 +1590,13 @@ class TierStore:
 
     # --------------------------------------------------------- changelog
     def _version_manifest(self, tier: str, version: int) -> dict:
-        base = self.path(tier)
-        vp = self._manifest_version_path(base, version)
-        if not os.path.exists(vp):
+        m = self._load_manifest(self.path(tier), version)
+        if m is None:
             raise TimeTravelError(
                 f"tier {tier!r} snapshot v{version} is not resolvable "
                 f"(resolvable: {self.versions(tier)})"
             )
-        with open(vp) as f:
-            return json.load(f)
+        return m
 
     def changelog(
         self, tier: str, from_version: int, to_version: int | None = None
@@ -2253,7 +2116,12 @@ class TierStore:
         asserted in tests): the rewrite appends new files beside the old
         ones and flips the snapshot manifest; a reader that planned
         against the previous snapshot keeps reading its (still on-disk)
-        files until trash GC, ``GC_GRACE_VERSIONS`` flips later."""
+        files until trash GC, ``GC_GRACE_VERSIONS`` flips later.
+
+        Packed siblings (``<tier>_packed``) commit through the same
+        manifest but are refused here: this store's value schema does not
+        hold their segment columns, and :meth:`write_packed` already lays
+        out one file per touched partition."""
         if tier.endswith("_packed"):
             raise ValueError(
                 "compact() operates on long-layout tiers; packed tiers are "
@@ -2264,12 +2132,7 @@ class TierStore:
             return {"tier": tier, "files_before": 0, "files_after": 0}
         with self._commit_lock(base):
             m = self._load_manifest(base)
-            if m is None:
-                files = self._list_parquet(base)
-                if not files:
-                    return {"tier": tier, "files_before": 0, "files_after": 0}
-                m = {"version": 0, "files": sorted(files), "trash": {}}
-            before = len(m["files"])
+            before = len((m or {}).get("files", []))
             if before == 0:
                 return {"tier": tier, "files_before": 0, "files_after": 0}
             df = self.read(tier)
@@ -2336,15 +2199,42 @@ class TierStore:
         }
 
     # ----------------------------------------------------- packed segments
+    #: value columns of a packed sibling tier: one Gorilla segment per
+    #: (series, segment window), stored with the segment start as ``t_us``
+    PACKED_SCHEMA = "n long, ts_codec binary, val_codec binary"
+
+    def packed_view(self) -> "TierStore":
+        """This store's view of the packed sibling tiers (``<tier>_packed``):
+        same root, bucket count and lock policy, with the segment value
+        schema :data:`PACKED_SCHEMA`. The store is value-schema-agnostic,
+        so packed tiers get every manifest operation — snapshot commits,
+        time travel, :meth:`rollback`, :meth:`delete_series`, retention,
+        :meth:`fsck` — through this view. It never resolves ``read_ref``:
+        packed reads always see the current snapshot."""
+        return TierStore(
+            self.spark,
+            self.root,
+            n_buckets=self.n_buckets,
+            series_cols=self.series_cols,
+            lock_wait_s=self.lock_wait_s,
+            upsert_retries=self.upsert_retries,
+            value_schema=self.PACKED_SCHEMA,
+        )
+
     def write_packed(
         self, df: DataFrame, tier: str, segment_us: int = 86400 * US
     ) -> None:
-        """Persist a tier Gorilla-packed: one binary segment row per
-        (series, segment window) — XOR-encoded values + delta-of-delta
-        timestamps (``operators/segments.py``) under the same
-        ``(p_date, p_bucket)`` partition spec as the long layout, so
-        retention partition-drops and bucket clustering apply unchanged.
-        The coarse tiers' long-term storage format per BASELINE."""
+        """Persist a tier Gorilla-packed as ``<tier>_packed``: one binary
+        segment row per (series, segment window) — XOR-encoded values +
+        delta-of-delta timestamps (``operators/segments.py``) — committed
+        through :meth:`write` of the :meth:`packed_view`. Packed tiers
+        are therefore snapshot tiers like the long layout: a partition
+        overwrite of the touched ``(p_date, p_bucket)`` partitions (the
+        segment start decides ``p_date``), concurrent readers keep their
+        snapshot, and retention, erasure and rollback go through the
+        manifest. ``segment_us`` is recorded in ``_segment_meta.json``
+        before the commit; the bucket spec comes from the manifest. The
+        coarse tiers' long-term storage format per BASELINE."""
         from ..operators.segments import pack_segments
 
         if self.value_cols != ["value"]:
@@ -2352,32 +2242,16 @@ class TierStore:
                 "Gorilla-packed tiers require the double signal shape "
                 f"(value double); this store holds {self.value_schema!r}"
             )
-
         segs = pack_segments(df, segment_us, self.series_cols)
-        out = segs.withColumn(
-            "p_date",
-            F.date_format(F.timestamp_micros(F.col("seg_start_us")), "yyyy-MM-dd"),
-        ).withColumn(
-            "p_bucket",
-            F.pmod(F.xxhash64(F.col(self.series_cols[0])), F.lit(self.n_buckets)).cast(
-                "int"
-            ),
-        )
         path = self.path(f"{tier}_packed")
-        (
-            out.write.mode("overwrite")
-            .partitionBy("p_date", "p_bucket")
-            .parquet(path)
+        os.makedirs(path, exist_ok=True)
+        meta = f"{path}/_segment_meta.json"
+        with open(meta + ".tmp", "w") as f:
+            json.dump({"segment_us": int(segment_us)}, f)
+        os.replace(meta + ".tmp", meta)
+        self.packed_view().write(
+            segs.withColumnRenamed("seg_start_us", "t_us"), f"{tier}_packed"
         )
-        with open(f"{path}/_segment_meta.json", "w") as f:
-            # n_buckets recorded so maintenance ops (erase) hash victim
-            # keys under the modulus that laid the dirs out, regardless
-            # of the store instance's default (packed tiers have no
-            # manifest to carry a spec history)
-            json.dump(
-                {"segment_us": int(segment_us), "n_buckets": self.n_buckets},
-                f,
-            )
 
     def read_packed(
         self,
@@ -2386,61 +2260,34 @@ class TierStore:
         end_us: int | None = None,
         series: str | Sequence[str] | None = None,
     ) -> DataFrame:
-        """Range-read a packed tier back as long rows. Pruning happens at
-        *segment* granularity before any decode runs: the p_date/seg_start
-        predicates reach the parquet scan, and only surviving segments pay
-        the Arrow unpack; exact t_us trimming follows after decode.
+        """Range-read a packed tier back as long rows. The segment files
+        are planned from the current snapshot manifest with the same
+        date, bucket and bounds pruning as :meth:`read` — the start of
+        the range widened by one segment width, since a segment that
+        starts before ``start_us`` may still contain it — and the
+        surviving segments' predicates reach the parquet scan, so only
+        they pay the one Arrow decode; exact t_us trimming follows.
 
         ``series`` restricts the read to the given series key(s) before
-        the decode: the scan keeps only the keys' ``p_bucket`` dirs
-        (hashed under the bucket count in ``_segment_meta.json``, which
-        laid them out) and the key predicate drops the other series'
-        segments in those dirs, so a one-url read decodes that url's
-        segments and nothing else."""
+        the decode: the plan keeps only the keys' ``p_bucket`` files and
+        the key predicate drops the other series' segments in them, so a
+        one-url read decodes that url's segments and nothing else."""
         from ..operators.segments import unpack_segments
 
         base = self.path(f"{tier}_packed")
-        meta_path = f"{base}/_segment_meta.json"
-        keys = [series] if isinstance(series, str) else series
-        has_data = (
-            any(
-                True
-                for _root, _dirs, files in os.walk(base)
-                for fn in files
-                if fn.endswith(".parquet")
-            )
-            if os.path.exists(base)
-            else False
-        )
-        if not has_data or (keys is not None and not keys):
+        m = self._load_manifest(base)
+        keys = self._series_keys(series)
+        if m is None or (keys is not None and not keys):
             return self._empty()
-        with open(meta_path) as f:
-            meta = json.load(f)
-        segment_us = meta["segment_us"]
-        segs = self.spark.read.parquet(base)
-        if keys is not None:
-            nb = int(meta.get("n_buckets", self.n_buckets))
-            buckets = sorted(self._buckets_of(keys, n_buckets=nb))
-            segs = segs.where(F.col("p_bucket").isin(buckets)).where(
-                F.col(self.series_cols[0]).isin(list(keys))
-            )
-        if start_us is not None:
-            # a segment starting before start_us may still contain it
-            d0 = time.strftime(
-                "%Y-%m-%d", time.gmtime(max(start_us - segment_us, 0) // US)
-            )
-            segs = segs.where(F.col("p_date") >= d0).where(
-                F.col("seg_start_us") > int(start_us) - segment_us
-            )
-        if end_us is not None:
-            d1 = time.strftime("%Y-%m-%d", time.gmtime(end_us // US))
-            segs = segs.where(F.col("p_date") <= d1).where(
-                F.col("seg_start_us") <= int(end_us)
-            )
-        rows = unpack_segments(
-            segs.select(*self.series_cols, "seg_start_us", "n", "ts_codec", "val_codec"),
-            self.series_cols,
+        with open(f"{base}/_segment_meta.json") as f:
+            segment_us = int(json.load(f)["segment_us"])
+        seg_lo = (
+            max(int(start_us) - segment_us + 1, 0)
+            if start_us is not None
+            else None
         )
+        segs = self.packed_view()._scan(base, m, seg_lo, end_us, keys)
+        rows = unpack_segments(segs, self.series_cols)
         if start_us is not None:
             rows = rows.where(F.col("t_us") >= int(start_us))
         if end_us is not None:
@@ -2449,39 +2296,25 @@ class TierStore:
 
     # --------------------------------------------------------- retention
     def expire_before(self, tier: str, cutoff_us: int) -> list[str]:
-        """Retention: drop whole day partitions older than the cutoff.
-
-        Manifest tiers do a true metadata-only delete (one manifest flip;
-        the expired files follow via trash GC — Iceberg's partition drop +
-        ``expire_snapshots`` pair), so in-flight readers are unaffected.
-        Legacy/packed directory tiers fall back to directory removal."""
-        import shutil
-
-        cutoff_date = time.strftime("%Y-%m-%d", time.gmtime(cutoff_us // US))
-        dropped: list[str] = []
+        """Retention: drop whole day partitions older than the cutoff, on
+        long and packed tiers alike — a metadata-only delete (one
+        manifest flip; the expired files follow via trash GC — Iceberg's
+        partition drop + ``expire_snapshots`` pair), so in-flight readers
+        are unaffected. Returns the dropped ``p_date=`` partitions."""
         base = self.path(tier)
         if not os.path.exists(base):
-            return dropped
-        if self._load_manifest(base) is not None:
-            with self._commit_lock(base):
-                m = self._load_manifest(base)
-                expired = [
-                    f
-                    for f in m["files"]
-                    if (pd := self._pdate_of(f)) is not None
-                    and pd < cutoff_date
-                ]
-                if expired:
-                    self._commit_append(base, m, set(), expired)
-            dropped = sorted(
-                {f"p_date={self._pdate_of(f)}" for f in expired}
-            )
-            return dropped
-        for name in sorted(os.listdir(base)):
-            if name.startswith("p_date=") and name.split("=", 1)[1] < cutoff_date:
-                shutil.rmtree(os.path.join(base, name))
-                dropped.append(name)
-        return dropped
+            return []
+        cutoff_date = self._day(cutoff_us)
+        with self._commit_lock(base):
+            m = self._load_manifest(base)
+            expired = [
+                f
+                for f in (m or {}).get("files", [])
+                if (pd := self._pdate_of(f)) is not None and pd < cutoff_date
+            ]
+            if expired:
+                self._commit_append(base, m, set(), expired)
+        return sorted({f"p_date={self._pdate_of(f)}" for f in expired})
 
     # --------------------------------------------------------- state tiers
     #
