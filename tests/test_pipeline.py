@@ -214,22 +214,25 @@ class TestEraseAndPublish:
         again = packed.delete_series("minute_packed", ["u0", "u1"])
         assert again["rows_deleted"] == 0
 
-    def test_hard_erase_unlinks_packed_victim_segments(self, spark, tmp_path):
+    @staticmethod
+    def _urls_on_disk(base):
         import pyarrow.parquet as pq
 
+        return {
+            u
+            for r, _, fs in os.walk(base)
+            for f in fs
+            if f.endswith(".parquet")
+            for u in pq.read_table(os.path.join(r, f), columns=["url"])
+            .column("url")
+            .to_pylist()
+        }
+
+    def test_hard_erase_unlinks_packed_victim_segments(self, spark, tmp_path):
         store = self._seed(spark, tmp_path)
-        base = store.path("minute_packed")
 
         def urls_on_disk():
-            return {
-                u
-                for r, _, fs in os.walk(base)
-                for f in fs
-                if f.endswith(".parquet")
-                for u in pq.read_table(os.path.join(r, f), columns=["url"])
-                .column("url")
-                .to_pylist()
-            }
+            return self._urls_on_disk(store.path("minute_packed"))
 
         # hard: no parquet file under minute_packed holds a victim segment
         pipeline.erase_urls(store, ["u0"], tiers=("minute",), hard=True)
@@ -244,6 +247,25 @@ class TestEraseAndPublish:
         assert packed.read("minute_packed", as_of_version=v).where(
             "url = 'u1'"
         ).count() >= 1
+        assert store.read_packed("minute").count() == 90
+
+    def test_hard_erase_reaches_trashed_copies(self, spark, tmp_path):
+        store = self._seed(spark, tmp_path)
+        # a second build retires the first files to trash, where they
+        # still hold every url's rows for the time-travel grace
+        store.write(store.read("minute"), "minute")
+        store.write_packed(store.read("minute"), "minute")
+        pipeline.erase_urls(store, ["u0"], tiers=("minute",), hard=True)
+        for tier in ("minute", "minute_packed"):
+            assert self._urls_on_disk(store.path(tier)) == {"u1", "u2"}
+        # a soft erase retires u1's files to trash; a hard erase that
+        # follows it unlinks them although none is live any more
+        pipeline.erase_urls(store, ["u1"], tiers=("minute",))
+        assert "u1" in self._urls_on_disk(store.path("minute_packed"))
+        pipeline.erase_urls(store, ["u1"], tiers=("minute",), hard=True)
+        for tier in ("minute", "minute_packed"):
+            assert self._urls_on_disk(store.path(tier)) == {"u2"}
+        assert store.read("minute").count() == 90
         assert store.read_packed("minute").count() == 90
 
     def test_publish_cli_flips_all_tiers(self, spark, tmp_path):

@@ -85,6 +85,17 @@ class TestPackedStore:
         back = sorted(map(tuple, store.read_packed("minute").collect()))
         assert back == first
 
+    def test_segment_width_is_fixed_per_tier(self, spark, store):
+        rows = minute_rows(2)
+        store.write_packed(mk(spark, rows), "minute", segment_us=HOUR)
+        v1 = store.current_version("minute_packed")
+        with pytest.raises(ValueError, match="segments"):
+            store.write_packed(mk(spark, rows), "minute", segment_us=12 * HOUR)
+        # nothing committed, and every snapshot still reads with its width
+        assert store.current_version("minute_packed") == v1
+        back = store.read_packed("minute", T0 + 30 * MIN, T0 + 2 * HOUR)
+        assert back.count() == 90
+
     def test_compression_beats_long_layout(self, spark, store):
         import os
 

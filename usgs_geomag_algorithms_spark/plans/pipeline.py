@@ -229,7 +229,8 @@ def erase_urls(
     ``packed_view`` — segment filtering, no Gorilla decode. On both
     layouts the default is a soft snapshot commit (the replaced files
     stay in trash for the time-travel grace); ``hard=True`` physically
-    unlinks them now. One entry point so an erasure request cannot miss
+    unlinks them now, together with the victim-bucket files earlier
+    commits had already moved to trash. One entry point so an erasure request cannot miss
     a derived tier — the operational gap audits actually flag."""
     out: dict = {}
     packed = store.packed_view()

@@ -947,9 +947,12 @@ class TierStore:
         ``hard=False`` (default) is a normal snapshot commit — replaced
         files go to trash and time travel within ``GC_GRACE_VERSIONS``
         still resolves the deleted rows (auditable).  ``hard=True`` adds
-        a second flip that physically unlinks the replaced files NOW —
-        the compliance erasure; snapshots that referenced them stop
-        resolving, by design.
+        a second flip that physically unlinks the replaced files NOW,
+        together with every victim-bucket file an earlier commit had
+        already moved to trash (an overwrite or a soft erase inside the
+        grace still holds the victims' rows there) — the compliance
+        erasure; snapshots that referenced them stop resolving, by
+        design. Trashed files that a tag pins stay until :meth:`untag`.
 
         Returns ``{"buckets", "files_replaced", "rows_deleted"}``.
         """
@@ -974,46 +977,62 @@ class TierStore:
                 *self._buckets_by_spec(m, keys).values()
             )
             dirs = {f"p_bucket={b}" for b in buckets}
-            victims = [
-                f
-                for f in m["files"]
-                if any(part in dirs for part in f.split("/"))
-            ]
-            if not victims:
-                return dict(zero, buckets=len(buckets))
-            # masked read: a pending equality delete on a victim bucket
-            # must not be resurrected by this rewrite (the rewritten
-            # files get a new sequence number, ending the mask's reach)
-            scan = self._read_live(base, m, victims).select(
-                *self.series_cols, "t_us", *self.value_cols
-            )
-            if len(keys) <= self.MAX_LITERAL_DELETE_KEYS:
-                remaining = scan.where(~F.col(key_col).isin(keys))
-            else:
-                remaining = scan.join(
-                    F.broadcast(keys_df), on=key_col, how="left_anti"
-                )
-            n_victim_rows = scan.count()
-            (
-                self._partitioned(remaining, n_buckets=self._tier_specs(m)[-1])
-                .write.mode("append")
-                .partitionBy("p_date", "p_bucket")
-                .parquet(base)
-            )
-            after = self._list_parquet(base)
-            m2 = self._commit_append(
-                base, m, after - before, victims, listing=after
-            )
-            n_remaining = (
-                self.spark.read.option("basePath", base)
-                .parquet(*[f"{base}/{f}" for f in after - before])
-                .count()
-                if after - before
-                else 0
-            )
+
+            def in_victim_bucket(f: str) -> bool:
+                return any(part in dirs for part in f.split("/"))
+
+            victims = [f for f in m["files"] if in_victim_bucket(f)]
+            # a hard erase also reaches the victims' rows in files an
+            # EARLIER commit retired (an overwrite or a soft erase inside
+            # the grace): every victim-bucket file in trash that no tag pins
+            trashed = []
             if hard:
-                gone = set(victims)
-                for f in victims:
+                _, pinned = self._tag_protected(base)
+                trashed = [
+                    f
+                    for f in m.get("trash", {})
+                    if f not in pinned and in_victim_bucket(f)
+                ]
+            if not victims and not trashed:
+                return dict(zero, buckets=len(buckets))
+            m2, n_victim_rows, n_remaining = m, 0, 0
+            if victims:
+                # masked read: a pending equality delete on a victim
+                # bucket must not be resurrected by this rewrite (the
+                # rewritten files get a new sequence number, ending the
+                # mask's reach)
+                scan = self._read_live(base, m, victims).select(
+                    *self.series_cols, "t_us", *self.value_cols
+                )
+                if len(keys) <= self.MAX_LITERAL_DELETE_KEYS:
+                    remaining = scan.where(~F.col(key_col).isin(keys))
+                else:
+                    remaining = scan.join(
+                        F.broadcast(keys_df), on=key_col, how="left_anti"
+                    )
+                n_victim_rows = scan.count()
+                (
+                    self._partitioned(
+                        remaining, n_buckets=self._tier_specs(m)[-1]
+                    )
+                    .write.mode("append")
+                    .partitionBy("p_date", "p_bucket")
+                    .parquet(base)
+                )
+                after = self._list_parquet(base)
+                m2 = self._commit_append(
+                    base, m, after - before, victims, listing=after
+                )
+                n_remaining = (
+                    self.spark.read.option("basePath", base)
+                    .parquet(*[f"{base}/{f}" for f in after - before])
+                    .count()
+                    if after - before
+                    else 0
+                )
+            if hard:
+                gone = set(victims) | set(trashed)
+                for f in gone:
                     try:
                         os.remove(os.path.join(base, f))
                     except FileNotFoundError:
@@ -2233,8 +2252,12 @@ class TierStore:
         segment start decides ``p_date``), concurrent readers keep their
         snapshot, and retention, erasure and rollback go through the
         manifest. ``segment_us`` is recorded in ``_segment_meta.json``
-        before the commit; the bucket spec comes from the manifest. The
-        coarse tiers' long-term storage format per BASELINE."""
+        by the tier's first write and is fixed from then on: every
+        snapshot, including rollback and time-travel targets, is read
+        with that one width, so a write with another width raises
+        ``ValueError`` (rebuild the tier from a fresh directory to change
+        it). The bucket spec comes from the manifest. The coarse tiers'
+        long-term storage format per BASELINE."""
         from ..operators.segments import pack_segments
 
         if self.value_cols != ["value"]:
@@ -2244,11 +2267,21 @@ class TierStore:
             )
         segs = pack_segments(df, segment_us, self.series_cols)
         path = self.path(f"{tier}_packed")
-        os.makedirs(path, exist_ok=True)
         meta = f"{path}/_segment_meta.json"
-        with open(meta + ".tmp", "w") as f:
-            json.dump({"segment_us": int(segment_us)}, f)
-        os.replace(meta + ".tmp", meta)
+        if self._load_manifest(path) is None:
+            os.makedirs(path, exist_ok=True)
+            with open(meta + ".tmp", "w") as f:
+                json.dump({"segment_us": int(segment_us)}, f)
+            os.replace(meta + ".tmp", meta)
+        else:
+            with open(meta) as f:
+                recorded = int(json.load(f)["segment_us"])
+            if recorded != int(segment_us):
+                raise ValueError(
+                    f"{tier}_packed holds {recorded} us segments; a write "
+                    f"of {int(segment_us)} us segments would misread every "
+                    f"snapshot"
+                )
         self.packed_view().write(
             segs.withColumnRenamed("seg_start_us", "t_us"), f"{tier}_packed"
         )
